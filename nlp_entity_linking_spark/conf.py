@@ -13,26 +13,91 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# Host-fit heap: the driver takes this share of the memory the host (or its
+# cgroup) lets the process commit, and -Xms this share of the heap — 4017m /
+# -Xms1004m on a 16 GB host, ~31g / ~8g on a 125 GB one. A quarter leaves
+# room for the Python workers and other tenants of a shared host.
+HEAP_SHARE = 0.25
+XMS_SHARE = 0.25
+
+
+def _parse_mem_bytes(s: str) -> int | None:
+    """'96g' / '512m' / '1t' -> bytes; None if unparseable.
+
+    Suffix-less values default to MiB — matching Spark's readSizeAsMb
+    semantics for spark.driver.memory ('4096' means 4096 MiB, not bytes).
+    The old bytes default made check_driver_heap silently fail open for
+    that spelling (4096 'bytes' fell under the toy threshold)."""
+    s = s.strip().lower()
+    if not s:
+        return None
+    units = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+    mult = units.get(s[-1])
+    digits = s[:-1] if mult else s
+    mult = mult or 2**20
+    try:
+        return int(float(digits) * mult)
+    except ValueError:
+        return None
+
+
+def host_memory_bytes(
+    meminfo: str = "/proc/meminfo",
+    cgroup_max: str = "/sys/fs/cgroup/memory.max",
+) -> int:
+    """min(MemTotal, cgroup v2 memory.max): what this process may commit."""
+    with open(meminfo) as f:
+        total = next(
+            int(line.split()[1]) * 1024
+            for line in f
+            if line.startswith("MemTotal:")
+        )
+    try:
+        with open(cgroup_max) as f:
+            raw = f.read().strip()
+        if raw != "max":
+            total = min(total, int(raw))
+    except OSError:
+        pass
+    return total
+
+
+def host_driver_memory(host_bytes: int) -> str:
+    """spark.driver.memory for a host with host_bytes of memory."""
+    return f"{int(host_bytes * HEAP_SHARE) // 2**20}m"
+
+
+def driver_java_options(driver_memory: str) -> str:
+    """extraJavaOptions for a driver heap: -Xms pinned to XMS_SHARE of it
+    (omitted when the heap string does not parse)."""
+    heap = _parse_mem_bytes(driver_memory)
+    xms = f"-Xms{int(heap // 2**20 * XMS_SHARE)}m " if heap else ""
+    return f"{xms}-XX:+UseG1GC"
+
+
 # Explicit tuning (SURVEY.md §4.2). These are the *local-mode* values; the
 # cluster deployment section in README.md documents how they scale with
 # executors (shuffle partitions ~ 2-3x total cores, broadcast threshold by
 # driver memory).
+_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory(
+    host_memory_bytes()
+)
 DEFAULT_CONF: dict[str, str] = {
     # local mode = single JVM: driver memory is the only heap knob that
-    # matters (container has 128 GiB). Must be set before JVM launch —
-    # which means these two entries only take effect when the session is
-    # created FROM PYTHON (python main.py / pytest / bench.py: py4j
-    # launches the JVM after the builder runs). Under spark-submit the
-    # driver JVM is already up, both are silently ignored, and the job
-    # runs on the 1g default — pass `--driver-memory` (and
-    # `--conf spark.driver.extraJavaOptions=...`) on the spark-submit
-    # line for any input beyond toy scale (README launch form;
-    # tools/bench_e2e_scale.py does this).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "96g"),
-    # pin the initial heap: growing a heap from the ~1g default under 32
+    # matters, sized from the host (SPARK_GRAFT_DRIVER_MEM overrides for
+    # deployments). Must be set before JVM launch — which means these two
+    # entries only take effect when the session is created FROM PYTHON
+    # (python main.py / pytest / bench.py: py4j launches the JVM after the
+    # builder runs). Under spark-submit the driver JVM is already up, both
+    # are silently ignored, and the job runs on the 1g default — pass
+    # `--driver-memory` (and `--conf spark.driver.extraJavaOptions=...`) on
+    # the spark-submit line for any input beyond toy scale (README launch
+    # form; tools/bench_e2e_scale.py does this).
+    "spark.driver.memory": _DRIVER_MEMORY,
+    # pin the initial heap: growing a heap from the ~1g default under many
     # allocating task threads causes GCLocker retry stalls in the Arrow
     # (native <-> JVM) path — first jobs run 3-5x slow until the heap grows.
-    "spark.driver.extraJavaOptions": "-Xms32g -XX:+UseG1GC",
+    "spark.driver.extraJavaOptions": driver_java_options(_DRIVER_MEMORY),
     "spark.driver.maxResultSize": "4g",
     # shuffle width: 1x cores (r8, reverting r7's 2x). r7 widened to 64
     # because the sort-merge cosine join starved at 32 (110s vs 50s at 1M
@@ -40,7 +105,7 @@ DEFAULT_CONF: dict[str, str] = {
     # round-over-round (BENCH_r07 rebench vs r06; er_blocking_pairs 2.7x).
     # r8 moved the big joins to shuffled-hash (no probe-side sorts), after
     # which width 64 no longer helps the features stage (33.6s vs 35.4s at
-    # 32, min-of-3, tools/bench_features_ab.py) while blocking clearly
+    # 32, min-of-3) while blocking clearly
     # prefers 32 (14.0s vs 16.6s min-of-3) and small scale factors stop
     # paying the wide-exchange tax. AQE coalescing still treats this as a
     # ceiling. Cluster guidance: 1-2x total cores (README deployment
@@ -125,26 +190,6 @@ def get_spark(
     return spark
 
 
-def _parse_mem_bytes(s: str) -> int | None:
-    """'96g' / '512m' / '1t' -> bytes; None if unparseable.
-
-    Suffix-less values default to MiB — matching Spark's readSizeAsMb
-    semantics for spark.driver.memory ('4096' means 4096 MiB, not bytes).
-    The old bytes default made check_driver_heap silently fail open for
-    that spelling (4096 'bytes' fell under the toy threshold)."""
-    s = s.strip().lower()
-    if not s:
-        return None
-    units = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
-    mult = units.get(s[-1])
-    digits = s[:-1] if mult else s
-    mult = mult or 2**20
-    try:
-        return int(float(digits) * mult)
-    except ValueError:
-        return None
-
-
 def check_driver_heap(
     intended: str, jvm_max_heap_bytes: int, warn=None
 ) -> bool:
@@ -182,7 +227,7 @@ def check_driver_heap(
         "launched before this session builder ran (spark-submit mode), so "
         "builder heap settings were SILENTLY IGNORED. Beyond toy inputs "
         "this GC-thrashes and OOMs. Pass the heap on the launch line: "
-        f"spark-submit --driver-memory {intended} "
-        "--conf 'spark.driver.extraJavaOptions=-Xms32g -XX:+UseG1GC' ..."
+        f"spark-submit --driver-memory {intended} --conf "
+        f"'spark.driver.extraJavaOptions={driver_java_options(intended)}' ..."
     )
     return False

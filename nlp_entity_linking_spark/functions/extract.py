@@ -145,90 +145,8 @@ def extract_page(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
 # plan evaluates extract_page TWICE — two ArrowEvalPython nodes, every page
 # extracted and shipped through Arrow twice (guide §4.4; observed at 1M
 # pages in plans/r08/records_before.txt). Values are identical either way;
-# only the evaluation count changes (plan-shape test in test_records).
+# only the evaluation count changes (plan-shape test in test_extract).
 extract_page_nd = extract_page.asNondeterministic()
-
-
-# ---------------------------------------------------------------------------
-# JVM extraction path (C1 fast path): the crawl payload NEVER crosses the
-# Python boundary — decode + strip run as codegen'd string expressions.
-# ---------------------------------------------------------------------------
-
-# Java regex twins of the compiled Python patterns above. Two documented
-# divergence caveats, both outside the extraction contract's input domain:
-# (a) malformed UTF-8 — the JVM cast passes raw bytes through while Python
-#     decodes errors='replace' (valid UTF-8 is bit-identical); callers with
-#     dirty encodings use engine='python';
-# (b) exotic control chars \x1c-\x1f — Python's \s includes them,
-#     Java's (?U)\s (Unicode White_Space) does not.
-# Equality on everything else is test-enforced (test_extract JVM-vs-Python
-# on the full fixture + adversarial cases incl. unicode NBSP).
-_J_SCRIPT = r"(?is)<(script|style)\b.*?</\1\s*>"
-_J_COMMENT = r"(?s)<!--.*?-->"
-_J_TAG = r"(?s)<[^>]*>"
-_J_WS = r"(?U)\s+"
-_J_TITLE = r"(?is)<title[^>]*>(.*?)</title\s*>"
-_J_BOLD = r"(?is)<(?:b|strong)\b[^>]*>(.*?)</(?:b|strong)\s*>"
-
-
-def decode_html(html_col) -> F.Column:
-    """binary -> string, null -> '' (matching the Python path's decode)."""
-    c = F.col(html_col) if isinstance(html_col, str) else html_col
-    return F.coalesce(c.cast("string"), F.lit(""))
-
-
-def extract_text_expr(decoded) -> F.Column:
-    """JVM twin of extract_text over an already-decoded string column:
-    same transform order (script/style -> comments -> tags -> entities ->
-    whitespace collapse -> trim), all whole-stage-codegen string ops."""
-    s = decoded if not isinstance(decoded, str) else F.col(decoded)
-    s = F.regexp_replace(s, _J_SCRIPT, " ")
-    s = F.regexp_replace(s, _J_COMMENT, " ")
-    s = F.regexp_replace(s, _J_TAG, " ")
-    for ent, rep in _ENTITIES.items():
-        s = F.replace(s, F.lit(ent), F.lit(rep))
-    s = F.regexp_replace(s, _J_WS, " ")
-    return F.trim(s)
-
-
-def _clean_fragment(x) -> F.Column:
-    # tag-strip + ws-collapse inside a HOF lambda: interpreted, but the
-    # arrays are tiny (a page has ~1 title + a few bold spans) — the html
-    # body itself never enters a lambda
-    return F.trim(
-        F.regexp_replace(F.regexp_replace(x, _J_TAG, " "), _J_WS, " ")
-    )
-
-
-def extract_mentions_expr(decoded) -> F.Column:
-    """JVM twin of the html mention extractor: title + bold/strong spans as
-    array<struct<surface,kind>> via regexp_extract_all (group 1), cleaned
-    and empty-filtered like the Python path."""
-    s = decoded if not isinstance(decoded, str) else F.col(decoded)
-
-    def spans(pattern: str, kind: str) -> F.Column:
-        frags = F.regexp_extract_all(s, F.lit(pattern), F.lit(1))
-        cleaned = F.filter(
-            F.transform(frags, _clean_fragment), lambda t: t != F.lit("")
-        )
-        return F.transform(
-            cleaned,
-            lambda t: F.struct(t.alias("surface"), F.lit(kind).alias("kind")),
-        )
-
-    return F.concat(spans(_J_TITLE, "title"), spans(_J_BOLD, "bold"))
-
-
-def extract_page_expr(html_col) -> F.Column:
-    """JVM twin of extract_page: struct(text, mentions) with one shared
-    decode. Default engine for the records stage — at real crawl payloads
-    (~100 KB/page) the Python path ships the whole corpus through Arrow
-    twice (JVM->Python->JVM); this one never leaves the JVM."""
-    decoded = decode_html(html_col)
-    return F.struct(
-        extract_text_expr(decoded).alias("text"),
-        extract_mentions_expr(decoded).alias("mentions"),
-    )
 
 
 def mention_regex_spark() -> str:

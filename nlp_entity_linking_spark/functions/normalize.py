@@ -42,12 +42,14 @@ def normalize(col: Column | str) -> Column:
     path where split streams the matcher). normalize sits under every
     tokenize/ctx_tokens/norm computation in the records stage, so this one
     expression was ~60% of er_records' wall (OPTIMIZATION_r08.md).
+
+    NULL in, NULL out: array_join propagates a NULL array (concat_ws would
+    turn it into ''), and split never yields NULL elements, so non-NULL
+    values are unchanged.
     """
     c = F.col(col) if isinstance(col, str) else col
     c = F.lower(fold_diacritics(c))
-    return F.concat_ws(
-        " ", F.array_remove(F.split(c, "[^a-z0-9]+"), "")
-    )
+    return F.array_join(F.array_remove(F.split(c, "[^a-z0-9]+"), ""), " ")
 
 
 def tokenize(norm_col: Column | str) -> Column:

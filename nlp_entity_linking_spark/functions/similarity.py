@@ -387,13 +387,13 @@ def pair_cosine_map_attach(pairs: DataFrame, weights: DataFrame) -> DataFrame:
     numpy reference at 1e-12.
 
     Scale bound: one broadcast entry per record (~170 B at ~10 tokens per
-    record). Callers gate on record count (build_features reuses its
-    attach_broadcast_max_records() gate, default 2M records ~ 350 MB) and
-    fall back to the shuffle path beyond it — the 10^12-row tier keeps the
-    exchange formulation. element_at on Spark's ArrayBasedMapData is a
-    linear probe, so per-pair cost is O(|tokens_a| x |tokens_b|) — fine at
-    ~10 ctx tokens, another reason corpora with fat token sets should stay
-    on the shuffle path.
+    record), built twice (the a- and b-side copies differ by alias, so
+    exchange reuse cannot dedupe them). build_features sizes both copies
+    against the driver heap and falls back to `pair_cosine` beyond it — the
+    10^12-row tier keeps the exchange formulation. element_at on Spark's
+    ArrayBasedMapData is a linear probe, so per-pair cost is
+    O(|tokens_a| x |tokens_b|) — fine at ~10 ctx tokens, another reason
+    corpora with fat token sets should stay on the shuffle path.
     """
     wmap = weights.groupBy("record_id").agg(
         F.map_from_entries(
@@ -407,7 +407,7 @@ def pair_cosine_map_attach(pairs: DataFrame, weights: DataFrame) -> DataFrame:
         F.lit(0.0),
         lambda acc, e: acc
         + F.coalesce(
-            e["value"] * F.element_at(F.col("_wmb"), e["key"]), F.lit(0.0)
+            e["value"] * F.try_element_at(F.col("_wmb"), e["key"]), F.lit(0.0)
         ),
     )
     # left joins: a record with zero ctx tokens has no wmap row; its pairs
@@ -421,59 +421,34 @@ def pair_cosine_map_attach(pairs: DataFrame, weights: DataFrame) -> DataFrame:
     )
 
 
-def pair_cosine(
-    pairs: DataFrame,
-    weights: DataFrame,
-    broadcast_weights: bool | None = None,
-    map_attach: bool = False,
-) -> DataFrame:
+def pair_cosine(pairs: DataFrame, weights: DataFrame) -> DataFrame:
     """pairs(id_a, id_b, ...) + weights(record_id, token, w) ->
     pairs + cos column (0.0 when no shared token).
 
     Exact sparse dot product of L2-normalized vectors: join a-side weights,
     then b-side on (id_b, token) — only shared tokens survive the inner
-    join — then sum per pair.
+    join — then sum per pair. The shuffle formulation for corpora whose
+    weight maps do not fit a broadcast (`pair_cosine_map_attach` below
+    that size; build_features chooses).
 
-    broadcast_weights: explicit small-side decision (north rule: broadcast
-    thresholds tuned, not defaulted). True pins both weight joins map-side —
-    right when |records| x tokens fits an executor; False forces shuffle
-    joins — the 10^12-row path. None = decide from a cheap count — the
-    convenience path for ad-hoc callers; pipeline code paths pass the flag
-    explicitly (build_features derives it from the records count it already
-    holds) so the features stage fires no extra count job.
-
-    map_attach=True routes to `pair_cosine_map_attach` (zero-exchange
-    broadcast-map formulation) — callers must gate it on record count; see
-    that function's docstring for the regime and numerics contract.
+    Both weight joins are pinned shuffled-hash with the weights as build
+    side (guide §3.1). The planner can't see through a persisted weights
+    frame (unknown stats -> sort-merge), but the build side is |weights| /
+    shuffle-partitions rows per task — a few MB — while the PROBE side of
+    the (id_b, token) join is the exploded pairs x tokens/record
+    intermediate (~300M rows at 1M pages): sort-merge would sort it,
+    shuffled-hash streams it unsorted (r8: the last SortMergeJoin in the
+    features plan, plans/r08/features_after.txt). Broadcasting the weights
+    instead lost its A/B at 1M pages (42-60s vs 35-36s): two ~9M-entry hash
+    relations built serially on the driver against 64 L2-resident
+    ~140k-entry maps built in parallel.
     """
-    if map_attach:
-        return pair_cosine_map_attach(pairs, weights)
-    if broadcast_weights is None:
-        # ~40 bytes/row; stay well under the 64 MiB broadcast threshold
-        broadcast_weights = weights.count() < 1_500_000
-    # non-broadcast path: pin shuffled-hash with the weights as build side
-    # (guide §3.1). The planner can't see through a persisted weights frame
-    # (unknown stats -> sort-merge), but the build side is |weights| /
-    # shuffle-partitions rows per task — a few MB — while the PROBE side of
-    # the (id_b, token) join is the exploded pairs x tokens/record
-    # intermediate (~300M rows at 1M pages): sort-merge would sort it,
-    # shuffled-hash streams it unsorted (r8: the last SortMergeJoin in the
-    # features plan, plans/r08/features_after.txt).
-    wrap = (
-        F.broadcast
-        if broadcast_weights
-        else (lambda df: df.hint("shuffle_hash"))
-    )
-    wa = wrap(
-        weights.select(
-            F.col("record_id").alias("id_a"), "token", F.col("w").alias("wa")
-        )
-    )
-    wb = wrap(
-        weights.select(
-            F.col("record_id").alias("id_b"), "token", F.col("w").alias("wb")
-        )
-    )
+    wa = weights.select(
+        F.col("record_id").alias("id_a"), "token", F.col("w").alias("wa")
+    ).hint("shuffle_hash")
+    wb = weights.select(
+        F.col("record_id").alias("id_b"), "token", F.col("w").alias("wb")
+    ).hint("shuffle_hash")
     dots = (
         pairs.select("id_a", "id_b")
         .join(wa, "id_a")

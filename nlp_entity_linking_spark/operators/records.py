@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.extract import extract_page_expr, extract_page_nd
+from ..functions.extract import extract_page_nd
 from ..functions.normalize import char_shingles, normalize, tokenize
 
 RECORD_COLS = (
@@ -61,8 +61,6 @@ def extract_records(
     pages: DataFrame,
     langs: tuple[str, ...] | None = None,
     shingle_n: int = 3,
-    extract_first: bool = False,
-    engine: str = "python",
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> records (RECORD_COLS).
 
@@ -70,80 +68,30 @@ def extract_records(
     projected away immediately after extraction so the binary column never
     rides a shuffle (SURVEY.md §4.1 column pruning).
 
-    extract_first: order of extraction vs latest-per-url dedup — measured at
-    sf0.1, both orders produce IDENTICAL records (same window ordering incl.
-    the xxhash64(html) tie-break, null-html/lang filters applied after the
-    window either way):
-      * True  — extract every snapshot (~1.1x UDF rows on the ~10% stale
-        ratio), then dedup: the window shuffles thin extracted text, the
-        html binary NEVER rides an exchange.
-      * False — dedup first (window shuffles the html payload), extract
-        only surviving snapshots.
-    The shuffle-html cost grows with payload size; the extra-extraction
-    cost grows with the re-crawl ratio. Measured (tools/bench_extract_order,
-    100k pages, quiet-host medians of 6): dedup-first 5.9s vs extract-first
-    7.0s at the fixture's ~1 KB html bodies and ~10% re-crawl — so
-    dedup-first is the default; at real crawl html sizes (~100 KB bodies)
-    the balance flips to extract-first, which is why the order is a flag.
-
-    engine: "python" (default) extracts via the Arrow/pandas UDF; "jvm"
-    runs byte-identical codegen string expressions instead (test-enforced
-    equality on valid UTF-8). MEASURED, against the intuition that
-    avoiding the Arrow crossing must win: python is faster at BOTH ~1 KB
-    html (2.7s vs 3.9s warm per 100k pages) and ~40 KB html (79s vs 107s
-    per 10k) — the regex CPU dominates the transfer, and Java's
-    backtracking engine is slower than CPython's sre on the
-    reluctant-dotall html patterns. "jvm" remains the right choice when
-    executors must run with NO Python workers at all (pure-JVM clusters),
-    or for plans that want extraction fused into codegen with other
-    column work."""
-    if engine not in ("jvm", "python"):
-        raise ValueError(f"unknown extraction engine: {engine!r}")
+    Dedup first, then extract: the latest-per-url window shuffles the html
+    payload once and only surviving snapshots pay the extraction. Measured
+    at 100k pages (~1 KB html, ~10% re-crawl), dedup-first 5.9s vs
+    extract-first 7.0s. Extraction runs in the Arrow/pandas UDF: a codegen
+    string-expression twin measured slower at both ~1 KB (3.9s vs 2.7s per
+    100k pages) and ~40 KB html (107s vs 79s per 10k) — the regex CPU
+    dominates the Arrow transfer, and Java's backtracking engine is slower
+    than CPython's sre on the reluctant-dotall html patterns."""
+    df = latest_per_url(pages)
+    if langs:
+        df = df.filter(F.col("lang").isin(*langs))
     # extract_page_nd: the non-deterministic-MARKED (but pure) Python UDF —
     # keeps the optimizer from duplicating the extraction under the surface
     # filters below (one ArrowEvalPython node, not two; guide §4.4)
-    page_fn = extract_page_expr if engine == "jvm" else extract_page_nd
-    if extract_first:
-        df = pages.select(
-            "url",
-            "lang",
-            "warc_ts",
-            F.col("html").isNotNull().alias("_has_html"),
-            F.xxhash64("html").alias("_hh"),
-            page_fn("html").alias("_page"),
-        ).select(
-            "url",
-            "lang",
-            "warc_ts",
-            "_has_html",
-            "_hh",
-            F.col("_page.text").alias("text"),
-            F.col("_page.mentions").alias("mentions"),
-        )
-        w = Window.partitionBy("url").orderBy(F.desc("warc_ts"), F.desc("_hh"))
-        df = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .filter(F.col("_has_html"))
-            .drop("_rn", "_has_html", "_hh", "warc_ts")
-        )
-        if langs:
-            df = df.filter(F.col("lang").isin(*langs))
-    else:
-        df = latest_per_url(pages)
-        if langs:
-            df = df.filter(F.col("lang").isin(*langs))
-        df = df.filter(F.col("html").isNotNull())
-        df = df.select(
-            "url",
-            "lang",
-            page_fn("html").alias("_page"),
-        ).select(
+    df = (
+        df.filter(F.col("html").isNotNull())
+        .select("url", "lang", extract_page_nd("html").alias("_page"))
+        .select(
             "url",
             "lang",
             F.col("_page.text").alias("text"),
             F.col("_page.mentions").alias("mentions"),
         )
+    )
     title = F.filter(F.col("mentions"), lambda m: m["kind"] == F.lit("title"))
     df = (
         df.withColumn("surface", F.element_at(title, 1)["surface"])

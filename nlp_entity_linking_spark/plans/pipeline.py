@@ -12,7 +12,6 @@ lineage, resume) around each stage.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -130,13 +129,9 @@ def build_features(
     # then moves 3 longs/row instead of two token arrays + surfaces — and
     # attach the per-record surfaces/tokens afterwards (those joins shuffle
     # the thin records table, same cost either way).
-    # ONE aggregate job powers both tfidf's n_docs and the broadcast
-    # decision: total ctx-token instances upper-bound the distinct
-    # (record, token) weight rows, so `tok < 1.5M` (~40 B/row, well under
-    # the 64 MiB broadcast ceiling) is a safe real-statistics threshold —
-    # pair_cosine then fires no count of its own.
-    # corpus_stats=(n_docs, tok): callers that already KNOW both (the
-    # streaming path accumulates them per epoch in the catalog marker)
+    # ONE aggregate job powers both tfidf's n_docs and the map-side
+    # decision. corpus_stats=(n_docs, tok): callers that already KNOW both
+    # (the streaming path accumulates them per epoch in the catalog marker)
     # pass them and this stage fires no corpus scan at all — per-batch
     # driver work stays O(batch) instead of one O(corpus) agg per
     # micro-batch.
@@ -147,32 +142,28 @@ def build_features(
             F.count("*").alias("n"), F.sum(F.size("ctx_tokens")).alias("tok")
         ).collect()[0]
         n_docs, tok = stats["n"], stats["tok"]
-    # cosine strategy from the SAME pre-counted statistics (north rule:
-    # thresholds tuned from real stats): under the attach-broadcast record
-    # cap the per-record weight maps fit a broadcast and the whole cosine
-    # runs map-side with ZERO exchanges (S.pair_cosine_map_attach — the
-    # r8 formulation that collapsed the 310M-row (id_b, token) exchange,
-    # the partial-agg exchange and the dots left-join at 1M pages); above
-    # the cap the join formulation shuffles — the 10^12-row path. The
-    # weights frame is persisted only on the shuffle path (it feeds three
-    # subplans there). On the map path the two wmap broadcasts (ma/mb
-    # differ by alias, so exchange reuse cannot dedupe them) each recompute
-    # the TF-IDF lineage — A/B-measured CHEAPER than persisting it (22.2s
-    # vs 26.6s min-of-4 at 1M pages): the duplicate builds run in parallel
-    # inside the two broadcast jobs, while a persist serializes one 9.4M-row
-    # cache materialization before either can start.
-    map_side = n_docs <= attach_broadcast_max_records()
+    # one strategy for both the cosine and the attach joins. Map-side: the
+    # per-record weight maps and the thin attach table are broadcast and the
+    # whole features stage crosses ZERO exchanges on the pair spine
+    # (S.pair_cosine_map_attach — r8 collapsed the 310M-row (id_b, token)
+    # exchange, the partial-agg exchange and the dots left-join at 1M
+    # pages). Otherwise the shuffled-hash joins — the 10^12-row path.
+    map_side = map_side_fits(n_docs, tok or 0, _driver_max_heap(records))
     weights = S.tfidf_weights(records, "ctx_tokens", n_docs=n_docs)
-    if not map_side:
+    thin_pairs = pairs.select("id_a", "id_b", "block_key")
+    if map_side:
+        # the two wmap broadcasts each recompute the TF-IDF lineage — A/B-
+        # measured CHEAPER than persisting it (22.2s vs 26.6s min-of-4 at
+        # 1M pages): the duplicate builds run in parallel inside the two
+        # broadcast jobs, while a persist serializes one 9.4M-row cache
+        # materialization before either can start.
+        cosed = S.pair_cosine_map_attach(thin_pairs, weights)
+    else:
+        # the weights feed three subplans on the shuffle path
         weights = weights.persist()
         if cache_registry is not None:
             cache_registry.append(weights)
-    cosed = S.pair_cosine(
-        pairs.select("id_a", "id_b", "block_key"),
-        weights,
-        broadcast_weights=(tok or 0) < weights_broadcast_max(),
-        map_attach=map_side,
-    )
+        cosed = S.pair_cosine(thin_pairs, weights)
     # per-record token-set string computed ONCE per record BEFORE the attach
     # joins (guide §2.3 "project before the exchange"): the old per-pair
     # token_set_lev re-sorted/deduped each record's token array once per
@@ -198,15 +189,10 @@ def build_features(
         F.col("norm").alias("norm_b"),
         F.col("_ts").alias("_ts_b"),
     )
-    # attach strategy from the SAME pre-counted statistic that sizes the
-    # weights broadcast (north rule: broadcast thresholds tuned from real
-    # stats, never defaulted): under the cap the thin (id, norm, ts) record
-    # table is broadcast and the 33M-pair fact table crosses ZERO attach
-    # exchanges (was: two full exchanges + sorts of the fat pair rows, one
-    # per side); above it the joins shuffle — the 10^12-row path.
-    wrap = (
-        F.broadcast if n_docs <= attach_broadcast_max_records() else (lambda d: d)
-    )
+    # under the map-side budget the thin (id, norm, ts) record table is
+    # broadcast too, and the 33M-pair fact table crosses ZERO attach
+    # exchanges instead of two full exchanges + sorts of the fat pair rows.
+    wrap = F.broadcast if map_side else (lambda d: d)
     feat = (
         cosed.join(wrap(a), "id_a")
         .join(wrap(b), "id_b")
@@ -217,30 +203,37 @@ def build_features(
     )
 
 
-def weights_broadcast_max() -> int:
-    """tok-count cap for broadcasting the TF-IDF weight table in
-    build_features (tok = total ctx-token instances, an upper bound on
-    weight rows — the stat the stage already aggregates).
-
-    Default keeps the long-standing 1.5M bound. Raising it to cover the 1M-
-    page corpus (tok ~9M) was A/B-measured in r8 and LOST: broadcast mins
-    42.2/52.4/60.3s vs shuffled-hash mins 35.3/35.8/36.4s (interleaved
-    runs, same staged inputs, OPTIMIZATION_r08.md). Two ~9M-entry broadcast
-    hash relations are built serially on the driver per run and probed with
-    poor cache locality by the ~300M-row exploded side, while the
-    shuffled-hash path builds 64 L2-resident ~140k-entry maps in parallel.
-    Kept as an env knob (SPARK_GRAFT_WEIGHTS_BROADCAST_MAX) for corpora
-    whose weight tables are genuinely tiny relative to pair volume."""
-    return int(os.environ.get("SPARK_GRAFT_WEIGHTS_BROADCAST_MAX", "1500000"))
+# Map-side features budget (build_features). Bytes per broadcast entry, as
+# framed rows: a weight map costs ~170 B per record at ~10 ctx tokens — ~17 B
+# per (token, w) entry — and is built twice (a- and b-side copies); the thin
+# attach row (8-byte id + two short strings) costs ~60 B.
+WMAP_BYTES_PER_TOKEN = 17
+ATTACH_BYTES_PER_RECORD = 60
+# The estimate must fit this share of the driver's max heap: the driver
+# holds each broadcast's collected rows and its built hash relation at
+# once, so the peak is about twice the estimate.
+MAP_SIDE_HEAP_SHARE = 1 / 8
+# ...and the record count within the cap r8 ran the map path under (it
+# measured map-attach beating the shuffle path at 1M pages: 22.2s vs 35.8s).
+MAP_SIDE_MAX_RECORDS = 2_000_000
 
 
-def attach_broadcast_max_records() -> int:
-    """Record-count cap for broadcasting the thin attach side of
-    build_features. ~60 B/row framed (8-byte id + two short strings), so the
-    2M default is ~120 MiB built — comfortable beside a 96 GiB local driver
-    and a few-GiB cluster executor alike; deployments with tiny executors
-    override via SPARK_GRAFT_ATTACH_BROADCAST_MAX (0 disables)."""
-    return int(os.environ.get("SPARK_GRAFT_ATTACH_BROADCAST_MAX", "2000000"))
+def map_side_fits(n_docs: int, tok: int, heap_bytes: int) -> bool:
+    """True when build_features' broadcasts — both weight-map copies plus
+    the thin attach table — fit the driver heap budget. tok (total
+    ctx-token instances) upper-bounds the distinct (record, token) entries,
+    so the token volume gates the maps, not only the record count."""
+    est = 2 * WMAP_BYTES_PER_TOKEN * tok + ATTACH_BYTES_PER_RECORD * n_docs
+    return (
+        n_docs <= MAP_SIDE_MAX_RECORDS
+        and est <= MAP_SIDE_HEAP_SHARE * heap_bytes
+    )
+
+
+def _driver_max_heap(df: DataFrame) -> int:
+    """The driver JVM's max heap, read over py4j — no Spark job."""
+    jvm = df.sparkSession._jvm
+    return int(jvm.java.lang.Runtime.getRuntime().maxMemory())
 
 
 # IRLS needs thousands of labeled pairs, not millions: cap the driver-side

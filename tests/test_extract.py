@@ -67,60 +67,6 @@ def test_mentions_title_and_bold(spark):
     ]
 
 
-def test_jvm_engine_matches_python_engine(spark):
-    """The default JVM extraction expressions must be byte-identical to the
-    Arrow/pandas path on the full fixture AND on adversarial html (nested
-    tags inside title, script/style with attributes, entities, unicode NBSP
-    and ideographic space, empty and null payloads)."""
-    from pyspark.sql import functions as F
-
-    from nlp_entity_linking_spark.functions.extract import (
-        extract_page,
-        extract_page_expr,
-    )
-    from nlp_entity_linking_spark.sources.synthetic import gen_pages
-
-    pages, _ = gen_pages(spark, 400)
-    adversarial = [
-        b"<html><head><title> Mixed &amp; Entities &lt;x&gt; </title></head>"
-        b"<body><b>Bold  one</b><script>var x='<b>no</b>';</script>"
-        b"<strong>Two</strong></body></html>",
-        b"<p>plain &nbsp; text</p>",
-        b"",
-        None,
-        "<title>unicode \xa0 nbsp</title> caf\xe9".encode("utf-8"),
-        b"<b></b><title></title>",
-        b"<STYLE a='b'>h1{}</STYLE>tail<!-- comment <b>x</b> -->end",
-        b"<title>a<b>nested</b>c</title>",
-        "tab\tnl\nideographic　space".encode("utf-8"),
-    ]
-    adv = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(adversarial)], "i long, html binary"
-    ).select(F.format_string("adv%d", "i").alias("url"), "html")
-    df = pages.select("url", "html").unionByName(adv)
-    cmp = df.select(
-        extract_page("html").alias("py"),
-        extract_page_expr("html").alias("jvm"),
-    )
-    bad = cmp.filter(
-        (F.col("py.text") != F.col("jvm.text"))
-        | (F.to_json("py.mentions") != F.to_json("jvm.mentions"))
-    ).count()
-    assert bad == 0
-
-
-def test_extract_engines_in_pipeline_agree(spark):
-    """extract_records output is engine-independent end to end (records
-    carry only derived columns, so equality here proves the whole stage)."""
-    from nlp_entity_linking_spark.operators.records import extract_records
-    from nlp_entity_linking_spark.sources.synthetic import gen_pages
-
-    pages, _ = gen_pages(spark, 300)
-    a = extract_records(pages, engine="jvm")
-    b = extract_records(pages, engine="python")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_extract_udf_evaluated_once_in_records_plan(spark):
     """The records plan must contain exactly ONE ArrowEvalPython node: the
     surface filters reference the UDF's output, and without the
@@ -131,5 +77,5 @@ def test_extract_udf_evaluated_once_in_records_plan(spark):
     from nlp_entity_linking_spark.sources.synthetic import gen_pages
 
     pages, _ = gen_pages(spark, 50)
-    plan = extract_records(pages, engine="python")._jdf.queryExecution().executedPlan().toString()
+    plan = extract_records(pages)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan

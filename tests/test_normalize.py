@@ -23,6 +23,7 @@ def test_normalize(spark):
     assert _one(spark, normalize("s"), "ACME-CORP (Ltd.)") == "acme corp ltd"
     assert _one(spark, normalize("s"), "")  == ""
     assert _one(spark, normalize("s"), "ñÑ çÇ šŠ") == "nn cc ss"
+    assert _one(spark, normalize("s"), None) is None  # NULL in, NULL out
 
 
 def test_tokenize_and_token_set(spark):

@@ -152,19 +152,6 @@ def test_blocking_quality_metrics(spark):
     assert 0 < q["pair_quality"] <= 1.0, q
 
 
-def test_extract_order_equivalence(spark):
-    """extract-first and dedup-first must produce byte-identical records
-    (same latest-per-url pick incl. the xxhash64(html) tie-break, same
-    null-html drops)."""
-    from nlp_entity_linking_spark.operators.records import extract_records
-
-    pages, _ = gen_pages(spark, 300)
-    a = extract_records(pages, extract_first=True)
-    b = extract_records(pages, extract_first=False)
-    assert a.count() == b.count() > 0
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_record_id_collision_audit(spark):
     from nlp_entity_linking_spark.operators.records import audit_record_ids
 
@@ -174,6 +161,59 @@ def test_record_id_collision_audit(spark):
     # a planted collision (two urls forced onto one record_id) must be seen
     forged = records.limit(2).withColumn("record_id", F.lit(12345))
     assert audit_record_ids(records.unionByName(forged)) == 1
+
+
+def test_map_side_budget():
+    """Both wmap copies plus the attach table must fit 1/8 of the heap,
+    within the 2M-record cap; the token volume gates, not only the count."""
+    heap = 4 * 2**30
+    assert P.map_side_fits(10_000, 100_000, heap)
+    assert not P.map_side_fits(10_000, 100_000, 1)
+    # few records, fat token sets: the count alone would have passed
+    assert not P.map_side_fits(10_000, 20_000_000, heap)
+    # past the measured record cap, however large the heap
+    assert not P.map_side_fits(2_000_001, 0, 2**50)
+    assert P.map_side_fits(0, 0, heap)
+
+
+def test_build_features_shuffle_path_matches_map_path(spark, monkeypatch):
+    """A heap too small for the map-side broadcasts sends build_features
+    down the shuffled-hash path: same pairs, same attached columns, cos
+    within 1e-12 of the map path."""
+    pages, _ = gen_pages(spark, 300)
+    cfg = P.PipelineConfig()
+    records = P.build_records(pages, cfg).persist()
+    pairs = P.build_candidate_pairs(records, cfg).persist()
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    mapped = P.build_features(records, pairs, cfg)
+    monkeypatch.setattr(P, "_driver_max_heap", lambda df: 1)
+    registry: list = []
+    shuffled = P.build_features(records, pairs, cfg, cache_registry=registry)
+    # the map path builds per-record weight maps (collect_list); the shuffle
+    # path pins shuffled-hash weight joins instead
+    assert "collect_list" in plan(mapped)
+    assert "collect_list" not in plan(shuffled)
+    assert "ShuffledHashJoin" in plan(shuffled)
+    assert len(registry) == 1  # the persisted weights, shuffle path only
+
+    def rows(df):
+        return {
+            (r.id_a, r.id_b): (r.block_key, r.norm_a, r.norm_b, r.tsl, r.cos)
+            for r in df.collect()
+        }
+
+    m, s = rows(mapped), rows(shuffled)
+    assert set(m) == set(s) and len(m) > 0
+    for k in m:
+        assert m[k][:4] == s[k][:4], k
+        assert abs(m[k][4] - s[k][4]) < 1e-12, (k, m[k][4], s[k][4])
+    for df in registry:
+        df.unpersist()
+    pairs.unpersist()
+    records.unpersist()
 
 
 def test_calibration_sample_is_bounded(spark):

@@ -161,9 +161,10 @@ def test_ann_dedup_plans_have_no_scale_killers(spark):
 def test_build_features_fires_exactly_one_job(spark):
     """Plan-construction cost audit: building the features stage must fire
     exactly ONE Spark job — the records count that powers tfidf's n_docs
-    AND the explicit broadcast decision. Regression guards two retired
-    anti-patterns: pair_cosine's implicit weights.count() and score_pairs'
-    df.rdd.getNumPartitions() plan conversion."""
+    AND the map-side decision (the driver heap is read over py4j, no job).
+    Guards two retired anti-patterns: pair_cosine's implicit
+    weights.count() and score_pairs' df.rdd.getNumPartitions() plan
+    conversion."""
     from nlp_entity_linking_spark.functions import similarity as S
     from nlp_entity_linking_spark.plans import pipeline as P
     from nlp_entity_linking_spark.sources.synthetic import gen_pages

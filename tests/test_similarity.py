@@ -137,29 +137,21 @@ def test_pair_cosine_map_attach_equals_shuffle_path(spark):
         [(1, 2), (1, 3), (1, 4), (1, 5), (5, 6), (3, 6)],
         "id_a long, id_b long",
     ).withColumn("block_key", F.lit(7).cast("long"))
-    old = {
-        (r.id_a, r.id_b): r.cos
-        for r in S.pair_cosine(
-            pairs, weights, broadcast_weights=False
-        ).collect()
+    shuffled = {
+        (r.id_a, r.id_b): r.cos for r in S.pair_cosine(pairs, weights).collect()
     }
-    new = {
-        (r.id_a, r.id_b): r.cos
-        for r in S.pair_cosine(pairs, weights, map_attach=True).collect()
-    }
-    assert set(old) == set(new) == {
+    mapped_df = S.pair_cosine_map_attach(pairs, weights)
+    mapped = {(r.id_a, r.id_b): r.cos for r in mapped_df.collect()}
+    assert set(shuffled) == set(mapped) == {
         (1, 2), (1, 3), (1, 4), (1, 5), (5, 6), (3, 6)
     }
-    for k in old:
-        assert abs(old[k] - new[k]) < 1e-12, (k, old[k], new[k])
-    assert new[(1, 5)] == 0.0 and new[(5, 6)] == 0.0  # empty-token records
-    assert new[(1, 4)] == 0.0  # disjoint token sets
-    assert new[(3, 6)] > 0.0  # shared "a"
+    for k in shuffled:
+        assert abs(shuffled[k] - mapped[k]) < 1e-12, (k, shuffled[k], mapped[k])
+    assert mapped[(1, 5)] == 0.0 and mapped[(5, 6)] == 0.0  # empty-token records
+    assert mapped[(1, 4)] == 0.0  # disjoint token sets
+    assert mapped[(3, 6)] > 0.0  # shared "a"
     # passthrough columns survive the map path
-    cols = S.pair_cosine(pairs, weights, map_attach=True).columns
-    assert cols == ["id_b", "id_a", "block_key", "cos"] or set(cols) == {
-        "id_a", "id_b", "block_key", "cos"
-    }
+    assert set(mapped_df.columns) == {"id_a", "id_b", "block_key", "cos"}
 
 
 def test_fit_calibration_separates():
