@@ -104,10 +104,18 @@ def _release_ckpt_blocks(df: DataFrame, rdd_id: int | None) -> None:
         pass
 
 
-def _driver_union_find(rows) -> dict[int, int]:
-    """Exact min-id component labels for a SMALL edge list, driver-side.
+def driver_union_find(rows, thresholds) -> list[dict[int, int]]:
+    """Exact min-id component labels for a SMALL scored edge list,
+    driver-side, at every threshold in ONE pass.
 
-    Path-compressed union-find, then each component labeled by its minimum
+    rows are (u, v, score). Returns one {vertex: min id} labeling per
+    threshold, in the given order: the components of the rows with
+    score >= t. Threshold subgraphs are nested, so rows are unioned in
+    descending score order and the labels are snapshotted as the pass
+    crosses each threshold — the sweep over k thresholds costs one sort
+    plus k O(V) snapshots, not k union-finds.
+
+    Path-compressed union-find, each component labeled by its minimum
     member id — the same labeling large-star/small-star converges to, so
     the two paths are interchangeable row-for-row
     (tests/test_cc.py::test_small_graph_fast_path_equals_distributed)."""
@@ -121,14 +129,20 @@ def _driver_union_find(rows) -> dict[int, int]:
             parent[x], x = r, parent[x]
         return r
 
-    for row in rows:
-        u, v = row[0], row[1]
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)  # union by min keeps roots minimal
-    return {x: find(x) for x in parent}
+    ranked = sorted(rows, key=lambda row: row[2], reverse=True)
+    snaps: dict[float, dict[int, int]] = {}
+    i = 0
+    for t in sorted(set(thresholds), reverse=True):
+        while i < len(ranked) and ranked[i][2] >= t:
+            u, v = ranked[i][0], ranked[i][1]
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)  # union by min keeps roots minimal
+            i += 1
+        snaps[t] = {x: find(x) for x in parent}
+    return [snaps[t] for t in thresholds]
 
 
 # Below this many (distinct, canonical) edges the star-iteration loop costs
@@ -154,6 +168,9 @@ def connected_components(
     `on_iteration(i, edges_df)` — optional hook the pipeline uses to commit
     per-iteration state to the catalog (resume support; the hook's parquet
     round-trip then truncates lineage, so pass checkpoint=False with it).
+    It fires only on the distributed loop: graphs of at most
+    `small_graph_threshold` canonical edges take the driver union-find path
+    and never iterate.
     Default checkpoint=True uses localCheckpoint: plan truncation without
     disk round-trips (durability comes from the catalog layer, not here).
 
@@ -184,15 +201,13 @@ def connected_components(
     # small-graph fast path: the convergence-stats job above already counts
     # the canonical edges, so this decision costs the big-graph path ZERO
     # extra jobs. Under the bound, collect + driver union-find replaces the
-    # whole iteration loop with identical labels. Disabled when an
-    # on_iteration hook is installed (the hook IS the product for the
-    # catalog-committed resume path) or by small_graph_threshold=None.
-    if (
-        small_graph_threshold
-        and on_iteration is None
-        and cur_stats[0] <= small_graph_threshold
-    ):
-        labels = _driver_union_find(cur.collect())
+    # whole iteration loop with identical labels — also when an on_iteration
+    # hook is installed: a graph this small is cheaper to recompute than to
+    # resume, so the hook never fires and the caller's own commit of the
+    # result is the resume point. small_graph_threshold=None disables it.
+    if small_graph_threshold and cur_stats[0] <= small_graph_threshold:
+        rows = [(u, v, 0.0) for u, v in cur.collect()]
+        labels = driver_union_find(rows, (0.0,))[0]
         _release_ckpt_blocks(cur, cur_id)  # abandoned checkpoint's blocks
         spark = edges.sparkSession
         return spark.createDataFrame(
@@ -225,12 +240,16 @@ def connected_components(
 
 
 def attach_singletons(labels: DataFrame, records: DataFrame) -> DataFrame:
-    """Records with no match edge form their own cluster (SURVEY.md J7)."""
+    """Records with no match edge form their own cluster (SURVEY.md J7).
+
+    Every label column of `labels` (all but record_id: `cluster_id`, or one
+    column per threshold for the sweep) falls back to the record's own id."""
+    cols = [c for c in labels.columns if c != "record_id"]
     return (
         records.select("record_id")
         .join(labels, "record_id", "left")
         .select(
             "record_id",
-            F.coalesce("cluster_id", "record_id").alias("cluster_id"),
+            *(F.coalesce(c, "record_id").alias(c) for c in cols),
         )
     )

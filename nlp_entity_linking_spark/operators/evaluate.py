@@ -14,36 +14,43 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pairwise_confusion(labeled_pairs: DataFrame, clusters: DataFrame) -> DataFrame:
-    """-> one row: tp, fp, fn, tn (longs). Broadcast-free: clusters is
+def pairwise_confusion(
+    labeled_pairs: DataFrame,
+    clusters: DataFrame,
+    label_cols: tuple[str, ...] = ("cluster_id",),
+) -> DataFrame:
+    """-> one row with one struct(tp, fp, fn, tn) column (longs) per label
+    column of `clusters`, named after it: several clusterings of the same
+    records are scored in ONE aggregate. Broadcast-free: clusters is
     joined twice on record id (shuffle equi-joins; cluster table is thin)."""
     ca = clusters.select(
-        F.col("record_id").alias("id_a"), F.col("cluster_id").alias("_ca")
+        F.col("record_id").alias("id_a"),
+        *(F.col(c).alias(f"_a{i}") for i, c in enumerate(label_cols)),
     )
     cb = clusters.select(
-        F.col("record_id").alias("id_b"), F.col("cluster_id").alias("_cb")
+        F.col("record_id").alias("id_b"),
+        *(F.col(c).alias(f"_b{i}") for i, c in enumerate(label_cols)),
     )
-    j = (
-        labeled_pairs.join(ca, "id_a", "left")
-        .join(cb, "id_b", "left")
-        .withColumn(
-            "pred",
-            (F.col("_ca").isNotNull())
-            & (F.col("_cb").isNotNull())
-            & (F.col("_ca") == F.col("_cb")),
+    j = labeled_pairs.join(ca, "id_a", "left").join(cb, "id_b", "left")
+    m = F.col("is_match")
+    cells = []
+    for i, c in enumerate(label_cols):
+        a, b = F.col(f"_a{i}"), F.col(f"_b{i}")
+        pred = a.isNotNull() & b.isNotNull() & (a == b)
+        cells.append(
+            F.struct(
+                F.sum((pred & m).cast("long")).alias("tp"),
+                F.sum((pred & ~m).cast("long")).alias("fp"),
+                F.sum((~pred & m).cast("long")).alias("fn"),
+                F.sum((~pred & ~m).cast("long")).alias("tn"),
+            ).alias(c)
         )
-    )
-    return j.agg(
-        F.sum((F.col("pred") & F.col("is_match")).cast("long")).alias("tp"),
-        F.sum((F.col("pred") & ~F.col("is_match")).cast("long")).alias("fp"),
-        F.sum((~F.col("pred") & F.col("is_match")).cast("long")).alias("fn"),
-        F.sum((~F.col("pred") & ~F.col("is_match")).cast("long")).alias("tn"),
-    )
+    return j.agg(*cells)
 
 
-def f1_metrics(labeled_pairs: DataFrame, clusters: DataFrame) -> dict:
-    row = pairwise_confusion(labeled_pairs, clusters).collect()[0]
-    tp, fp, fn = row["tp"] or 0, row["fp"] or 0, row["fn"] or 0
+def f1_from_confusion(cell) -> dict:
+    """One pairwise_confusion struct -> tp/fp/fn/tn + precision/recall/F1."""
+    tp, fp, fn = cell["tp"] or 0, cell["fp"] or 0, cell["fn"] or 0
     precision = tp / (tp + fp) if tp + fp else 0.0
     recall = tp / (tp + fn) if tp + fn else 0.0
     f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
@@ -51,11 +58,16 @@ def f1_metrics(labeled_pairs: DataFrame, clusters: DataFrame) -> dict:
         "tp": tp,
         "fp": fp,
         "fn": fn,
-        "tn": row["tn"] or 0,
+        "tn": cell["tn"] or 0,
         "precision": precision,
         "recall": recall,
         "f1": f1,
     }
+
+
+def f1_metrics(labeled_pairs: DataFrame, clusters: DataFrame) -> dict:
+    row = pairwise_confusion(labeled_pairs, clusters).collect()[0]
+    return f1_from_confusion(row["cluster_id"])
 
 
 def blocking_quality(

@@ -351,16 +351,22 @@ def select_threshold(
     transitively, so the operating point should be precision-first — a
     pair-level sweep systematically under-thresholds).
 
-    `scored` must be persisted by the caller (it is re-read per candidate).
+    Small graphs (the edges at min(candidates) within CC.SMALL_GRAPH_EDGES)
+    are swept in one pass: the edges are collected once, one driver
+    union-find labels every candidate (threshold subgraphs are nested), and
+    ONE pairwise_confusion aggregate scores all of them — a handful of jobs
+    instead of a CC + F1 evaluation per candidate.
 
-    The per-candidate CC+F1 evaluations are independent, so they run on a
-    driver-side thread pool: Spark job submission is thread-safe, and a
-    sequential sweep leaves the cluster idle between each tiny CC
-    iteration's jobs — concurrent submission overlaps them (measured ~3x
-    on the test fixture; on a real cluster it fills executors the serial
-    loop would leave cold). Result selection replays candidate order, so
-    the winner (first strictly-greater F1) is identical to the serial
-    sweep regardless of completion order.
+    Larger graphs run one distributed CC + F1 per candidate. There `scored`
+    must be persisted by the caller (it is re-read per candidate), and the
+    independent evaluations run on a driver-side thread pool: Spark job
+    submission is thread-safe, and a sequential sweep leaves the cluster
+    idle between each CC iteration's jobs — concurrent submission overlaps
+    them (measured ~3x on the test fixture; on a real cluster it fills
+    executors the serial loop would leave cold).
+
+    Either way result selection replays candidate order, so the winner
+    (first strictly-greater F1) is identical to a serial sweep.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -368,23 +374,53 @@ def select_threshold(
     if not candidates:
         return (0.5, {"f1": -1.0})
 
-    def evaluate(t: float) -> dict:
-        edges = scored.filter(F.col("score") >= t).select(
-            F.col("id_a").alias("u"), F.col("id_b").alias("v")
+    swept = scored.filter(F.col("score") >= min(candidates)).select(
+        F.col("id_a").alias("u"), F.col("id_b").alias("v"), "score"
+    )
+    if swept.count() <= CC.SMALL_GRAPH_EDGES:
+        metrics = _sweep_small_graph(
+            swept.collect(), records, labeled_pairs, candidates
         )
-        labels = CC.connected_components(edges, max_iter=cfg.max_cc_iter)
-        clusters = CC.attach_singletons(labels, records)
-        return E.f1_metrics(labeled_pairs, clusters)
+    else:
 
-    # cap concurrent sweeps: each holds a full CC loop's jobs in flight,
-    # and a caller passing a dense grid must not swamp the scheduler
-    with ThreadPoolExecutor(max_workers=min(len(candidates), 8)) as pool:
-        metrics = list(pool.map(evaluate, candidates))
+        def evaluate(t: float) -> dict:
+            edges = scored.filter(F.col("score") >= t).select(
+                F.col("id_a").alias("u"), F.col("id_b").alias("v")
+            )
+            labels = CC.connected_components(edges, max_iter=cfg.max_cc_iter)
+            clusters = CC.attach_singletons(labels, records)
+            return E.f1_metrics(labeled_pairs, clusters)
+
+        # cap concurrent sweeps: each holds a full CC loop's jobs in flight,
+        # and a caller passing a dense grid must not swamp the scheduler
+        with ThreadPoolExecutor(max_workers=min(len(candidates), 8)) as pool:
+            metrics = list(pool.map(evaluate, candidates))
     best = (0.5, {"f1": -1.0})
     for t, m in zip(candidates, metrics):
         if m["f1"] > best[1]["f1"]:
             best = (t, m)
     return best
+
+
+def _sweep_small_graph(
+    rows: list,
+    records: DataFrame,
+    labeled_pairs: DataFrame,
+    candidates: tuple[float, ...],
+) -> list[dict]:
+    """F1 metrics per candidate from collected (u, v, score) edge rows: one
+    driver union-find pass, one label column per candidate, one aggregate."""
+    labelings = CC.driver_union_find(rows, candidates)
+    cols = [f"c{i}" for i in range(len(candidates))]
+    # the lowest threshold's graph holds every vertex of the others
+    vertices = labelings[candidates.index(min(candidates))]
+    labels = records.sparkSession.createDataFrame(
+        [(x, *(lab.get(x) for lab in labelings)) for x in vertices],
+        ", ".join(["record_id long"] + [f"{c} long" for c in cols]),
+    )
+    clusters = CC.attach_singletons(labels, records)
+    row = E.pairwise_confusion(labeled_pairs, clusters, cols).collect()[0]
+    return [E.f1_from_confusion(row[c]) for c in cols]
 
 
 def run_pipeline(

@@ -2,8 +2,9 @@
 
 Each stage = read committed inputs -> transform -> atomic catalog commit ->
 per-partition lineage append. A crashed run relaunched with --resume
-re-executes only stages missing a commit marker; inside the CC loop each
-iteration is individually committed, so resume re-enters at iteration k+1.
+re-executes only stages missing a commit marker; inside the distributed CC
+loop (graphs above CC.SMALL_GRAPH_EDGES) each iteration is individually
+committed, so resume re-enters at iteration k+1.
 """
 
 from __future__ import annotations
@@ -149,9 +150,11 @@ def _clustered(
     cfg: P.PipelineConfig,
     resume: bool,
 ) -> DataFrame:
-    """CC with per-iteration catalog commits: a killed run resumes from the
-    last committed iteration's edge state (north rule: "checkpointed
-    iterations")."""
+    """CC with per-iteration catalog commits above CC.SMALL_GRAPH_EDGES: a
+    killed run resumes from the last committed iteration's edge state (north
+    rule: "checkpointed iterations"). A graph within the bound is labeled by
+    the driver union-find in one step and commits no iteration; the
+    `clusters` stage commit is its resume point."""
     initial = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     start = 0
     if resume:

@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import random
 
-from nlp_entity_linking_spark.operators.cc import attach_singletons, connected_components
+from nlp_entity_linking_spark.operators.cc import (
+    attach_singletons,
+    connected_components,
+    driver_union_find,
+)
 
 
 def _uf_oracle(edges):
@@ -129,7 +133,11 @@ def test_cc_releases_superseded_checkpoints(spark):
 
     chain = [(i, i + 1) for i in range(2000)]  # needs ~11 iterations
     df = spark.createDataFrame(chain, "u long, v long")
-    labels = connected_components(df, max_iter=15, on_iteration=hook)
+    # small_graph_threshold=None: the checkpoints live on the distributed
+    # loop, which a 2,000-edge graph would otherwise skip
+    labels = connected_components(
+        df, max_iter=15, on_iteration=hook, small_graph_threshold=None
+    )
     assert labels.count() == 2001
     assert len(live_counts) >= 8  # non-vacuous: the loop actually iterated
     # hook fires after nxt's ckpt but before cur's release, so the ceiling
@@ -138,3 +146,23 @@ def test_cc_releases_superseded_checkpoints(spark):
     # after convergence only the final iteration's checkpoint survives
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert len(after - before) <= 1, sorted(after - before)
+
+
+def test_driver_union_find_labels_every_threshold_in_one_pass():
+    """One pass over score-ranked rows == a separate union-find oracle per
+    threshold, on random scored graphs whose scores hit the thresholds
+    exactly and leave the top threshold's graph empty."""
+    rng = random.Random(11)
+    thresholds = (0.5, 0.65, 0.8, 0.9)
+    for _ in range(5):
+        nodes = list(range(-40, 40))
+        scores = (0.3, 0.5, 0.6, 0.65, 0.7, 0.8, 0.85)
+        rows = [
+            (rng.choice(nodes), rng.choice(nodes), rng.choice(scores))
+            for _ in range(rng.randint(1, 120))
+        ]
+        rows = [r for r in rows if r[0] != r[1]]
+        got = driver_union_find(rows, thresholds)
+        for t, labels in zip(thresholds, got):
+            assert labels == _uf_oracle([(u, v) for u, v, s in rows if s >= t])
+        assert got[-1] == {}

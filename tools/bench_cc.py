@@ -94,7 +94,10 @@ def main() -> None:
         return df
 
     t0 = time.perf_counter()
-    labels = connected_components(edges, max_iter=30, on_iteration=on_iteration)
+    # small_graph_threshold=None: time the star loop at every size
+    labels = connected_components(
+        edges, max_iter=30, on_iteration=on_iteration, small_graph_threshold=None
+    )
     labels = labels.persist()
     n_labeled = labels.count()
     wall = time.perf_counter() - t0

@@ -295,7 +295,8 @@ def main() -> None:
     if killed_at is None:
         raise RuntimeError(
             "run B finished before cc_iter_1 committed — kill point missed; "
-            "raise n_pages or poll faster"
+            "raise n_pages (a match graph within CC.SMALL_GRAPH_EDGES commits "
+            "no iteration) or poll faster"
         )
     proc.wait()
     assert not os.path.exists(done_marker), "clusters committed despite kill"
