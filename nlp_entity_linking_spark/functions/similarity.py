@@ -19,15 +19,12 @@ input_hint: "no per-row Python"):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.normalize import token_set
 
 # ---------------------------------------------------------------------------
 # Jaro-Winkler (batch python; called only from inside Arrow batches)
@@ -195,14 +192,6 @@ def _jw_chunk(s1_list: list, s2_list: list) -> np.ndarray:
     return np.where(eq, 1.0, out)
 
 
-def _jw_batch(a: pd.Series, b: pd.Series, chunk: int = 16384) -> np.ndarray:
-    """pd.Series front-end for `_jw_batch_np` (kept for callers/tests that
-    hold pandas columns)."""
-    return _jw_batch_np(
-        a.to_numpy(dtype=object), b.to_numpy(dtype=object), chunk
-    )
-
-
 # cross-batch memo bound: ~100 B/entry -> ~200 MB/worker worst case; a
 # task whose distinct-pair stream exceeds it just loses memo hits.
 _JW_MEMO_MAX = 2_000_000
@@ -282,23 +271,14 @@ def _jw_batch_np(
 # ---------------------------------------------------------------------------
 
 
-def token_set_lev(tokens_a: Column | str, tokens_b: Column | str) -> Column:
-    """1 - lev(joined sorted-unique tokens)/max_len, in [0, 1]; JVM-only."""
-    return token_set_lev_str(
-        F.concat_ws(" ", token_set(tokens_a)),
-        F.concat_ws(" ", token_set(tokens_b)),
-    )
-
-
 def token_set_lev_str(ts_a: Column | str, ts_b: Column | str) -> Column:
-    """token_set_lev over ALREADY-JOINED sorted-unique token strings.
+    """Token-set Levenshtein: 1 - lev(a, b) / max_len, in [0, 1]; JVM-only.
 
-    The pipeline computes the canonical token-set string once per RECORD
-    before the pair attach joins (build_features): the per-pair form above
-    re-sorts/dedups/joins each record's tokens once per pair it appears in
-    — a ~pairs/records-x repeat of identical array work — and ships the
-    token arrays through the attach exchanges. Same values bit-for-bit:
-    only the place the string is materialized moves.
+    Inputs are ALREADY-JOINED sorted-unique token strings
+    (`F.concat_ws(" ", token_set(tokens))`). The pipeline computes that
+    canonical string once per RECORD before the pair attach joins
+    (build_features) instead of re-sorting/deduping each record's tokens
+    once per pair it appears in.
     """
     a = F.col(ts_a) if isinstance(ts_a, str) else ts_a
     b = F.col(ts_b) if isinstance(ts_b, str) else ts_b
@@ -545,17 +525,15 @@ def fit_calibration(
 def score_pairs(
     pairs: DataFrame,
     model: ScoreModel,
-    surface_a: str = "norm_a",
-    surface_b: str = "norm_b",
     n_partitions: int | None = None,
     input_partitions: int | None = None,
 ) -> DataFrame:
     """Fused feature+score batch pass (SURVEY.md I7).
 
-    Input must already carry `tsl` and `cos` (JVM-computed). One
-    mapInPandas pass per partition computes Jaro-Winkler and the calibrated
-    sigmoid — a single Arrow round-trip; batch size bounded by
-    spark.sql.execution.arrow.maxRecordsPerBatch.
+    Input must carry the surfaces `norm_a`/`norm_b` and the JVM-computed
+    `tsl` and `cos`. One mapInArrow pass per partition computes
+    Jaro-Winkler and the calibrated sigmoid — a single Arrow round-trip;
+    batch size bounded by spark.sql.execution.arrow.maxRecordsPerBatch.
 
     Fast path: when model.weights[0] == 0.0 (fit_calibration's marker for
     "jw dropped from the model") the pass never leaves the JVM — score is a
@@ -598,12 +576,8 @@ def score_pairs(
         # signal (see the jw-ablation note in README). `jw` is emitted as
         # NULL, not a fake number: it was never computed, and downstream
         # must not mistake it for a similarity of 0.
-        _, w2z, w3z = model.weights
-        z0 = F.lit(w2z) * F.col("tsl") + F.lit(w3z) * F.col("cos") + F.lit(
-            model.bias
-        )
         return pairs.withColumn("jw", F.lit(None).cast("double")).withColumn(
-            "score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z0))
+            "score", logistic_expr(model)
         )
     spark = pairs.sparkSession
     if n_partitions is None:
@@ -621,7 +595,7 @@ def score_pairs(
     in_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                           for f in pairs.schema.fields)
     out_schema = f"{in_fields}, jw double, score double"
-    ia, ib = in_names.index(surface_a), in_names.index(surface_b)
+    ia, ib = in_names.index("norm_a"), in_names.index("norm_b")
     it, ic = in_names.index("tsl"), in_names.index("cos")
     out_names = in_names + ["jw", "score"]
 
@@ -694,12 +668,16 @@ def may_reach_threshold(model: ScoreModel, threshold: float) -> Column:
 
 
 def logistic_expr(model: ScoreModel) -> Column:
-    """Pure-JVM sigmoid over existing jw/tsl/cos columns — used when jw was
-    already materialized (e.g. re-scoring with new calibration).
+    """Pure-JVM sigmoid over existing jw/tsl/cos columns — score_pairs's
+    w1 == 0 fast path, and re-scoring pairs whose jw is already
+    materialized under a new calibration.
 
     A w1==0 model (jw dropped by calibration) never references the jw
-    column at all: score_pairs's fast path emits jw as NULL for such
-    models, and SQL's 0 * NULL = NULL would otherwise null the score."""
+    column at all: the fast path emits jw as NULL for such models, and
+    SQL's 0 * NULL = NULL would otherwise null the score. The explicit
+    F.lit(1.0) operands keep Catalyst's printed expression as
+    `1.0 / (1.0 + EXP(..))` (a bare Python 1.0 on the left flips it to
+    `EXP(..) + 1.0`)."""
     w1, w2, w3 = model.weights
     z = (
         F.lit(w2) * F.col("tsl")
@@ -708,4 +686,4 @@ def logistic_expr(model: ScoreModel) -> Column:
     )
     if w1 != 0.0:
         z = F.lit(w1) * F.col("jw") + z
-    return 1.0 / (1.0 + F.exp(-z))
+    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))

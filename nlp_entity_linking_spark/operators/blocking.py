@@ -6,10 +6,9 @@ deduped, with explicit hot-key salting ahead of AQE's skew-join safety net.
 
 Scale design notes (the part that must survive 100 TB):
 
-* MinHash signatures are computed ROW-LOCALLY with higher-order functions
-  (`transform` + `xxhash64` inside the lambda) — no explode, no shuffle, no
-  Python. k hash functions come from the seeded family h_i(x) =
-  xxhash64(i, x, seed); the signature never leaves whole-stage codegen.
+* MinHash signatures are k min-aggregates of the seeded hash family
+  h_i(x) = xxhash64(i, x, seed) over exploded shingles — no Python, no
+  higher-order-function lambdas; the hashing stays in whole-stage codegen.
 * Band keys are 64-bit hashes of signature slices — compact shuffle keys.
 * The block->pairs self-join is the only quadratic surface; it is bounded by
   (a) band width (probability of co-blocking decays with dissimilarity),
@@ -31,83 +30,6 @@ DEFAULT_BANDS = 8  # 8 bands x 8 rows: LSH s-curve threshold ~ (1/8)^(1/8) ≈ 0
 DEFAULT_SALT_CAP = 64  # max records per (possibly salted) block
 
 
-def minhash_signature(
-    shingles_col, k: int = DEFAULT_K, seed: int = 42
-):
-    """k-permutation minhash signature as array<long> — row-local column
-    expression: sig[i] = min over shingles of xxhash64(i, shingle, seed).
-
-    NOTE: higher-order-function lambdas run in interpreted mode (not
-    whole-stage codegen), so this is the *small-data/unit-test* form; the
-    pipeline uses `minhash_signatures_df` (explode + codegen hash
-    aggregate), which is ~10x faster and map-side combined.
-    """
-    sh = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(
-            F.transform(sh, lambda s: F.xxhash64(i, s, F.lit(seed)))
-        ),
-    )
-
-
-def minhash_signatures_df(
-    records: DataFrame,
-    shingles_col: str = "shingles",
-    k: int = DEFAULT_K,
-    seed: int = 42,
-) -> DataFrame:
-    """records(record_id, <shingles>) -> (record_id, sig: array<long>).
-
-    Scale path: explode shingles once, evaluate the k hash family inside
-    whole-stage codegen, aggregate k mins with map-side partial combine
-    (shuffle = |records| x k longs, independent of shingle count), assemble
-    the signature array.
-    """
-    ex = records.select(
-        "record_id", F.explode(shingles_col).alias("_sh")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("_sh"), F.lit(seed))).alias(f"_h{i}")
-        for i in range(k)
-    ]
-    per = ex.groupBy("record_id").agg(*aggs)
-    return per.select(
-        "record_id", F.array(*[F.col(f"_h{i}") for i in range(k)]).alias("sig")
-    )
-
-
-def band_keys(sig_col, bands: int = DEFAULT_BANDS, k: int = DEFAULT_K):
-    """LSH banding: array of `bands` compact 8-byte block keys.
-
-    Key = xxhash64('mh', band, r signature elements) — a LONG, not a
-    string: block keys are the biggest shuffle keys in the pipeline, and
-    8-byte hash keys shuffle + compare cheaper than formatted strings
-    (measured on the TF-IDF exchanges first, then here; see README). The
-    family tag 'mh' is folded into the hash so different blockers can't
-    collide by construction of their inputs.
-
-    Encoding contract: the band's r signature elements are hashed as r
-    SEPARATE long arguments — NOT as one array<long> slice (xxhash64
-    encodes the two differently) — precisely so these keys are
-    interchangeable with `lsh_blocks`'s, which hashes its r per-band min
-    columns directly. A corpus blocked by one API and probed via the other
-    collides correctly (test_blocking.py::test_band_keys_match_lsh_blocks).
-    """
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    r = k // bands
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit("mh"),
-                F.lit(b),
-                *[F.element_at(sig, b * r + j + 1) for j in range(r)],
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def lsh_blocks(
     records: DataFrame,
     shingles_col: str = "shingles",
@@ -124,10 +46,8 @@ def lsh_blocks(
     tag + band index folded into the hash) — compact shuffle keys for the
     pipeline's largest exchanges.
 
-    Key encoding is BYTE-IDENTICAL to `band_keys` over
-    `minhash_signatures_df` signatures (both hash r separate long args) —
-    blocks built by either API collide with probes built by the other
-    (test_blocking.py::test_band_keys_match_lsh_blocks).
+    The k min aggregates combine map-side: shuffle = |records| x k longs,
+    independent of shingle count.
     """
     r = k // bands
     ex = records.select("record_id", F.explode(shingles_col).alias("_sh"))
@@ -242,22 +162,6 @@ def cross_shard_rep_pairs(
         F.greatest("_rep", "_rep_next").alias("id_b"),
         # family-tagged long key in the same 8-byte domain as apply_salt
         F.xxhash64(F.lit("xs"), F.col("block_key")).alias("block_key"),
-    )
-
-
-def block_stats(blocks: DataFrame) -> DataFrame:
-    """Block-size diagnostics (SURVEY.md D5)."""
-    return (
-        blocks.groupBy("block_key")
-        .agg(F.count("*").alias("n_records"))
-        .agg(
-            F.count("*").alias("n_blocks"),
-            F.max("n_records").alias("max_block"),
-            F.avg("n_records").alias("avg_block"),
-            F.sum(
-                F.col("n_records") * (F.col("n_records") - 1) / 2
-            ).cast("long").alias("candidate_pairs"),
-        )
     )
 
 

@@ -165,13 +165,11 @@ def build_features(
             cache_registry.append(weights)
         cosed = S.pair_cosine(thin_pairs, weights)
     # per-record token-set string computed ONCE per record BEFORE the attach
-    # joins (guide §2.3 "project before the exchange"): the old per-pair
-    # token_set_lev re-sorted/deduped each record's token array once per
-    # pair it appeared in (~pairs/records x duplicate work at 33M pairs /
-    # 1M records) and shipped the token ARRAYS through both attach
-    # exchanges; the joined string is smaller and the tsl expression over
-    # it is bit-identical (token_set_lev == token_set_lev_str by
-    # construction).
+    # joins (guide §2.3 "project before the exchange"): a per-pair form
+    # would re-sort/dedup each record's token array once per pair it
+    # appears in (~pairs/records x duplicate work at 33M pairs / 1M
+    # records) and ship the token ARRAYS through both attach exchanges;
+    # the joined string is smaller and the tsl value is the same.
     from ..functions.normalize import token_set
 
     thin = records.select(
@@ -298,23 +296,22 @@ def calibrate(
     return dataclasses.replace(cfg, model=model, score_threshold=threshold)
 
 
-def score_edges(
-    features: DataFrame, cfg: PipelineConfig, gate: bool = True
-) -> DataFrame:
-    """Fused batch scoring -> thresholded undirected match edges (D4).
+def score_edges(features: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Fused batch scoring -> thresholded undirected match edges (D4). The
+    one edge-scoring step: batch, streaming epochs and compaction all call
+    it (streaming callers `.select("id_a", "id_b")`, and Catalyst prunes
+    the unused columns).
 
-    gate=True (default) drops certain-rejects JVM-side BEFORE the Python
-    Jaro-Winkler pass (S.may_reach_threshold): jw is bounded in [0, 1], so
-    pairs whose best-case score can't reach the threshold never cross into
-    Arrow. Output is byte-identical either way (the gate is exact — it only
-    removes pairs the score filter would drop); what changes is the Python
-    surface, the dominant CPU cost of the engine. Keep gate=False only to
-    A/B the gate itself.
+    Certain-rejects are dropped JVM-side BEFORE the Python Jaro-Winkler
+    pass (S.may_reach_threshold): jw is bounded in [0, 1], so pairs whose
+    best-case score can't reach the threshold never cross into Arrow. The
+    gate is exact — it only removes pairs the score filter would drop — so
+    the edges equal the ungated score_pairs + threshold filter; what shrinks
+    is the Python surface, the dominant CPU cost of the engine.
     """
-    if gate:
-        features = features.filter(
-            S.may_reach_threshold(cfg.model, cfg.score_threshold)
-        )
+    features = features.filter(
+        S.may_reach_threshold(cfg.model, cfg.score_threshold)
+    )
     scored = S.score_pairs(features, cfg.model)
     return scored.select(
         "id_a",

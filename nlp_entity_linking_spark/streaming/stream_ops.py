@@ -332,80 +332,6 @@ def incremental_cluster(
     return untouched.unionByName(sub_labels).unionByName(new_singletons)
 
 
-def stateful_running_totals_tws(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """The transformWithStateInPandas twin of `stateful_running_totals` —
-    Spark 4's successor arbitrary-state API: explicit StatefulProcessor
-    lifecycle (init/handleInputRows/close), named typed state handles
-    (getValueState) instead of a single opaque tuple, RocksDB-backed state
-    store required. Output contract is IDENTICAL to the old-API operator
-    (per-key n_events / total_value / update_idx per touched batch), so the
-    test asserts both APIs produce the same final totals.
-
-    Scale shape unchanged: O(1) state per key, partitioned by the grouping
-    key, Arrow-batched both directions.
-
-    Environment note: transformWithState's state server speaks protobuf;
-    this sandbox ships no protobuf wheel (no network to install one), so
-    the equality test self-skips here and runs on any standard cluster
-    image — the applyInPandasWithState twin is the fully-tested-here
-    path. Requires the RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-            T.StructField("update_idx", T.IntegerType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("upd", T.IntegerType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total, upd = (
-                self._totals.get() if self._totals.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            upd += 1
-            self._totals.update((n, total, upd))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "update_idx": [upd],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def incremental_er(
     spark: SparkSession,
     pages_stream: DataFrame,
@@ -470,7 +396,6 @@ def incremental_er(
     batch is unpersisted in a finally block: long-running streams must not
     accumulate cached blocks/weights across epochs.
     """
-    from ..functions import similarity as S
     from ..operators import blocking as B
     from ..plans import pipeline as P
     from ..sources.catalog import Catalog
@@ -561,19 +486,7 @@ def incremental_er(
                 merged_records, pairs, cfg, cache_registry=cached,
                 corpus_stats=corpus_stats,
             )
-            # same exact JVM cheap-reject gate as the batch edge path
-            # (score_edges): certain non-edges never cross into Python, and
-            # the edge set is provably unchanged
-            edges_new = (
-                S.score_pairs(
-                    feats.filter(
-                        S.may_reach_threshold(cfg.model, cfg.score_threshold)
-                    ),
-                    cfg.model,
-                )
-                .filter(F.col("score") >= cfg.score_threshold)
-                .select("id_a", "id_b")
-            )
+            edges_new = P.score_edges(feats, cfg).select("id_a", "id_b")
 
             # append-only epoch tables: ONLY this batch's rows are written.
             # The three writes + the pair count are independent actions over
@@ -708,7 +621,6 @@ def _converge_hot_key_edges(
     Work is O(hot blocks), not O(corpus pairs): hot keys are by definition
     few (count > salt_cap each), and every expansion below is salt-bounded.
     """
-    from ..functions import similarity as S
     from ..operators import blocking as B
     from ..plans import pipeline as P
 
@@ -759,14 +671,7 @@ def _converge_hot_key_edges(
             records, hot_pairs, cfg, cache_registry=cached,
             corpus_stats=corpus_stats,
         )
-        fresh = (
-            S.score_pairs(
-                feats.filter(S.may_reach_threshold(cfg.model, cfg.score_threshold)),
-                cfg.model,
-            )
-            .filter(F.col("score") >= cfg.score_threshold)
-            .select("id_a", "id_b")
-        )
+        fresh = P.score_edges(feats, cfg).select("id_a", "id_b")
         out = (
             keep_outside.unionByName(keep_nonhot)
             .unionByName(fresh)
@@ -880,8 +785,6 @@ def compact(
             corpus_stats=stats_tuple,
         )
     elif mode == "rescore":
-        from ..functions import similarity as S
-
         # rescore runs as a periodically scheduled reconciliation inside a
         # long-lived streaming driver: collect the batch pipeline's internal
         # persists (LSH blocks, SNB ranks, TF-IDF weights) and drop them
@@ -894,14 +797,7 @@ def compact(
             state["records"], pairs, cfg, cache_registry=rescore_cached,
             corpus_stats=stats_tuple,
         )
-        converged = (
-            S.score_pairs(
-                feats.filter(S.may_reach_threshold(cfg.model, cfg.score_threshold)),
-                cfg.model,
-            )
-            .filter(F.col("score") >= cfg.score_threshold)
-            .select("id_a", "id_b")
-        )
+        converged = P.score_edges(feats, cfg).select("id_a", "id_b")
     if converged is not None:
         state["edges"] = converged
     for name in ("records", "blocks", "edges"):

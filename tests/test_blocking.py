@@ -20,40 +20,17 @@ def _records(spark, names):
 
 
 def test_minhash_deterministic_and_similarity_monotone(spark):
+    """lsh_blocks keys are a pure function of the shingles: identical
+    inputs get identical key sets, and a near-duplicate shares more band
+    keys with the original than an unrelated string does."""
     r = _records(spark, ["acme corporation", "acme corporation", "acme corp", "zzz totally other"])
-    sig = r.select("record_id", B.minhash_signature("shingles", k=64).alias("sig")).collect()
-    sigs = {row.record_id: row.sig for row in sig}
-    assert sigs[0] == sigs[1]  # identical inputs -> identical signatures
-    sim_close = sum(a == b for a, b in zip(sigs[0], sigs[2])) / 64
-    sim_far = sum(a == b for a, b in zip(sigs[0], sigs[3])) / 64
-    assert sim_close > sim_far
-    assert sim_close > 0.4
-
-
-def test_band_keys_match_lsh_blocks(spark):
-    """The two LSH key APIs must emit BYTE-IDENTICAL keys on the same
-    records: a corpus blocked by lsh_blocks and a probe keyed via
-    minhash_signatures_df + band_keys (or vice versa) must collide. Guards
-    the xxhash64 encoding contract — hashing an array<long> slice vs r
-    separate long args produces different hashes, which would silently
-    yield zero cross-API candidate pairs."""
-    r = _records(
-        spark,
-        ["acme corporation", "acme corp", "jane doe llc", "zzz other thing"],
-    )
-    via_blocks = {
-        (x.record_id, x.block_key)
-        for x in B.lsh_blocks(r, k=16, bands=4).collect()
-    }
-    sigs = B.minhash_signatures_df(r, k=16)
-    via_band_keys = {
-        (x.record_id, k)
-        for x in sigs.select(
-            "record_id", B.band_keys("sig", bands=4, k=16).alias("keys")
-        ).collect()
-        for k in x.keys
-    }
-    assert via_blocks == via_band_keys and via_blocks
+    keys = {}
+    for row in B.lsh_blocks(r, k=64, bands=32).collect():
+        keys.setdefault(row.record_id, set()).add(row.block_key)
+    assert keys[0] == keys[1] and len(keys[0]) == 32
+    shared_close = len(keys[0] & keys[2])
+    shared_far = len(keys[0] & keys[3])
+    assert shared_close > shared_far
 
 
 def test_lsh_blocks_recall_on_duplicates(spark):

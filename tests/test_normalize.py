@@ -51,17 +51,18 @@ def test_normalize_properties_random_corpus(spark):
     """Seeded randomized property sweep, vectorized in one pass:
     normalize is idempotent; tokens of a normalized string are nonempty and
     alphanumeric; word_ngrams emits exactly max(len-n+1, 0<len -> 1, 0 -> 0)
-    grams; token_set_lev is symmetric and in [0, 1]."""
+    grams; token-set Levenshtein is symmetric and in [0, 1]."""
     import random
 
     from pyspark.sql import functions as F
 
     from nlp_entity_linking_spark.functions.normalize import (
         normalize,
+        token_set,
         tokenize,
         word_ngrams,
     )
-    from nlp_entity_linking_spark.functions.similarity import token_set_lev
+    from nlp_entity_linking_spark.functions.similarity import token_set_lev_str
 
     rng = random.Random(42)
     alphabet = "abcXYZ 123 éñü .,!?-_()# \t%$"
@@ -76,6 +77,8 @@ def test_normalize_properties_random_corpus(spark):
     df = spark.createDataFrame(rows, "i long, s string, t string")
     n = normalize("s")
     toks = tokenize(n)
+    ts_s = F.concat_ws(" ", token_set(toks))
+    ts_t = F.concat_ws(" ", token_set(tokenize(normalize("t"))))
     checks = df.select(
         (normalize(n) == n).alias("idem"),
         (
@@ -89,12 +92,10 @@ def test_normalize_properties_random_corpus(spark):
             .otherwise(F.size(toks) - 2)
         ).alias("gram_count"),
         (
-            F.round(token_set_lev(toks, tokenize(normalize("t"))), 9)
-            == F.round(token_set_lev(tokenize(normalize("t")), toks), 9)
+            F.round(token_set_lev_str(ts_s, ts_t), 9)
+            == F.round(token_set_lev_str(ts_t, ts_s), 9)
         ).alias("tsl_sym"),
-        token_set_lev(toks, tokenize(normalize("t"))).between(0.0, 1.0).alias(
-            "tsl_range"
-        ),
+        token_set_lev_str(ts_s, ts_t).between(0.0, 1.0).alias("tsl_range"),
     )
     bad = checks.filter(
         ~F.col("idem")

@@ -284,17 +284,20 @@ def test_calibrate_drops_nonpositive_jw(spark):
 
 def test_score_edges_gate_byte_equal(spark):
     """The JVM cheap-reject gate must not change the edge set (or the
-    clusters downstream): gate=True vs gate=False on the golden fixture
-    produce identical (id_a, id_b, score) rows, while the gate provably
-    prunes part of the Python surface."""
+    clusters downstream): score_edges (gated) and the ungated reference
+    score_pairs + threshold filter on the golden fixture produce identical
+    (id_a, id_b, score) rows, while the gate provably prunes part of the
+    Python surface."""
     pages, _ = gen_pages(spark, 500)
     cfg = P.PipelineConfig()
     records = P.build_records(pages, cfg).persist()
     pairs = P.build_candidate_pairs(records, cfg)
     feats = P.build_features(records, pairs, cfg).persist()
     feats.count()
-    gated = P.score_edges(feats, cfg, gate=True)
-    ungated = P.score_edges(feats, cfg, gate=False)
+    gated = P.score_edges(feats, cfg)
+    ungated = S.score_pairs(feats, cfg.model).filter(
+        F.col("score") >= cfg.score_threshold
+    )
     rows_g = {
         (r.id_a, r.id_b, round(r.score, 12)) for r in gated.collect()
     }
@@ -303,8 +306,6 @@ def test_score_edges_gate_byte_equal(spark):
     }
     assert rows_g == rows_u and rows_g
     # the gate actually prunes on this fixture (certain rejects exist)
-    from nlp_entity_linking_spark.functions import similarity as S
-
     n_all = feats.count()
     n_kept = feats.filter(
         S.may_reach_threshold(cfg.model, cfg.score_threshold)

@@ -10,7 +10,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from nlp_entity_linking_spark.functions import similarity as S
-from nlp_entity_linking_spark.functions.normalize import tokenize
+from nlp_entity_linking_spark.functions.normalize import token_set, tokenize
 
 
 def test_jaro_winkler_known_values():
@@ -35,7 +35,7 @@ def test_jaro_winkler_properties():
 
 
 def test_jw_batch_matches_reference():
-    """The vectorized bit-parallel _jw_batch must be BIT-identical to the
+    """The vectorized bit-parallel _jw_batch_np must be BIT-identical to the
     per-row reference (same IEEE ops, same association order) — including
     empty/equal/short strings, unicode past the BMP, dedup-colliding pairs,
     and the >63-char row-path fallback."""
@@ -57,9 +57,9 @@ def test_jw_batch_matches_reference():
         if rng.random() < 0.2:
             b = a
         cases.append((a, b))
-    a_s = pd.Series([c[0] for c in cases], dtype=object)
-    b_s = pd.Series([c[1] for c in cases], dtype=object)
-    got = S._jw_batch(a_s, b_s, chunk=1024)
+    a_s = np.array([c[0] for c in cases], dtype=object)
+    b_s = np.array([c[1] for c in cases], dtype=object)
+    got = S._jw_batch_np(a_s, b_s, chunk=1024)
     ref = np.array(
         [S.jaro_winkler_py(a or "", b or "") for a, b in cases],
         dtype=np.float64,
@@ -76,7 +76,10 @@ def test_token_set_lev(spark):
         "a string, b string",
     )
     got = df.select(
-        S.token_set_lev(tokenize(F.col("a")), tokenize(F.col("b"))).alias("t")
+        S.token_set_lev_str(
+            F.concat_ws(" ", token_set(tokenize(F.col("a")))),
+            F.concat_ws(" ", token_set(tokenize(F.col("b")))),
+        ).alias("t")
     ).collect()
     assert got[0].t == 1.0  # token reorder is free
     assert got[1].t < 0.34

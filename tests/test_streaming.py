@@ -171,78 +171,6 @@ def test_stateful_running_totals(spark, tmp_path):
     assert any(upd >= 2 for _, _, upd in got.values())
 
 
-def test_transform_with_state_matches_old_api(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas (StatefulProcessor + RocksDB
-    state store) produces the same final per-user totals as the
-    applyInPandasWithState operator and the batch aggregate, with
-    cross-batch state proven by update_idx >= 2.
-
-    SKIPS when the `protobuf` package is absent: transformWithState's
-    state-server protocol is protobuf-serialized, and this sandbox has no
-    protobuf wheel and no network (verified: the driver worker dies on
-    `from google.protobuf import descriptor`). Any standard cluster image
-    with pyspark's declared deps runs this test; the applyInPandasWithState
-    twin above covers the same semantics without the protobuf dependency."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs protobuf (absent in this sandbox)",
-    )
-    src = str(tmp_path / "events_tws")
-    batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id",
-        "event_type", "value", "props",
-    )
-    batch.repartition(16).write.mode("overwrite").parquet(src)  # 2 batches
-    events = ST.read_events_stream(spark, src, max_files_per_trigger=8).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            ST.stateful_running_totals_tws(events)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("tws_totals")
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    out = spark.sql(
-        """SELECT user_id, n_events, total_value, update_idx FROM (
-             SELECT *, row_number() OVER (PARTITION BY user_id
-                                          ORDER BY update_idx DESC) AS rn
-             FROM tws_totals) WHERE rn = 1"""
-    )
-    got = {r.user_id: (r.n_events, r.total_value, r.update_idx) for r in out.collect()}
-    want = {
-        r.user_id: (r.n, r.s)
-        for r in batch.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum(F.coalesce("value", F.lit(0.0))).alias("s"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for u, (n, total, _upd) in got.items():
-        assert n == want[u][0]
-        assert abs(total - want[u][1]) < 1e-6
-    assert any(upd >= 2 for _, _, upd in got.values())
-
-
 def test_incremental_er_resumes_across_restarts(spark, tmp_path):
     """ST6 resume: after a completed run, new files arrive and a NEW query
     starts from the same checkpoint — it processes only the new wave
