@@ -13,15 +13,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def bounded_sample(
-    df: DataFrame, key_cols: tuple[str, ...], cap: int, n: int | None = None
-) -> DataFrame:
+def bounded_sample(df: DataFrame, key_cols: tuple[str, ...], cap: int) -> DataFrame:
     """Down-sample `df` to ~cap rows deterministically. No-op when already
-    under cap. `n` lets callers that already know the row count skip the
-    count job; otherwise one cheap count fires (dwarfed by whatever
-    multi-pass consumer — IRLS, KMeans — the sample feeds)."""
-    if n is None:
-        n = df.count()
+    under cap. One cheap count fires (dwarfed by whatever multi-pass
+    consumer — IRLS, KMeans — the sample feeds)."""
+    n = df.count()
     if n <= cap:
         return df
     k = -(-n // cap)  # ceil(n / cap) residue classes

@@ -526,7 +526,6 @@ def score_pairs(
     pairs: DataFrame,
     model: ScoreModel,
     n_partitions: int | None = None,
-    input_partitions: int | None = None,
 ) -> DataFrame:
     """Fused feature+score batch pass (SURVEY.md I7).
 
@@ -550,18 +549,8 @@ def score_pairs(
     size-based coalescing targets ~64 MiB *JVM* partitions, which is far
     too coarse for a CPU-bound UDF stage — left alone it can funnel the
     whole table through 2-3 Python workers. Default: 2x defaultParallelism.
-
-    input_partitions: the caller's knowledge of how many partitions feed
-    this stage (parquet scan width, an upstream repartition). When omitted,
-    the estimate is spark.sql.shuffle.partitions — exact for every in-repo
-    caller (they all feed score_pairs from shuffled joins, whose width IS
-    shuffle.partitions). It is NOT a safe default for inputs fed straight
-    from a narrow scan (re-scoring a 1-partition parquet of persisted pairs
-    from a tool/notebook): no driver-side estimate can see that width
-    without physically planning the query (an RDD partition probe forces exactly
-    that), so narrow-scan callers MUST pass input_partitions explicitly —
-    probe the materialized input's partition count once, caller-side — or
-    the CPU-bound UDF funnels through the scan's few Python workers.
+    The input is taken to be spark.sql.shuffle.partitions wide, the width
+    of the shuffled joins that feed it in the pipeline.
     """
     stale = [c for c in ("jw", "score") if c in pairs.columns]
     if stale:
@@ -582,12 +571,10 @@ def score_pairs(
     spark = pairs.sparkSession
     if n_partitions is None:
         n_partitions = 2 * spark.sparkContext.defaultParallelism
-    if input_partitions is None:
-        input_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # repartition only when the input is under-partitioned for the worker
     # pool: a redundant repartition costs a full disk shuffle — in local
     # mode shuffles share ONE disk, so gratuitous shuffles anti-scale.
-    if input_partitions < n_partitions // 2:
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) < n_partitions // 2:
         pairs = pairs.repartition(n_partitions)
     w1, w2, w3 = model.weights
     b0 = model.bias

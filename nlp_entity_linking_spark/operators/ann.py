@@ -375,7 +375,6 @@ def lsh_topk(
     n_planes: int = 12,
     n_tables: int = 4,
     seed: int = 42,
-    dim: int | None = None,
     n_probe: int = 1,
     corpus_buckets: DataFrame | None = None,
 ) -> DataFrame:
@@ -398,8 +397,8 @@ def lsh_topk(
     string — vectors do NOT ride the explode), broadcast bucket join against
     the (small) query buckets, candidate dedup, then ONE corpus join
     re-attaches vectors to the deduped candidate set for exact verification.
-    `dim` is accepted for API compatibility; the hyperplanes self-size from
-    the data worker-side, so no driver scan happens either way."""
+    The hyperplanes self-size from the data worker-side, so no driver scan
+    happens."""
     if corpus_buckets is not None:
         cols = set(corpus_buckets.columns)
         if not {id_col, "bucket"} <= cols:

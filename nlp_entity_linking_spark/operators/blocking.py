@@ -7,7 +7,7 @@ deduped, with explicit hot-key salting ahead of AQE's skew-join safety net.
 Scale design notes (the part that must survive 100 TB):
 
 * MinHash signatures are k min-aggregates of the seeded hash family
-  h_i(x) = xxhash64(i, x, seed) over exploded shingles — no Python, no
+  h_i(x) = xxhash64(i, x, MINHASH_SEED) over exploded shingles — no Python, no
   higher-order-function lambdas; the hashing stays in whole-stage codegen.
 * Band keys are 64-bit hashes of signature slices — compact shuffle keys.
 * The block->pairs self-join is the only quadratic surface; it is bounded by
@@ -25,17 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_K = 64  # minhash permutations
-DEFAULT_BANDS = 8  # 8 bands x 8 rows: LSH s-curve threshold ~ (1/8)^(1/8) ≈ 0.77
-DEFAULT_SALT_CAP = 64  # max records per (possibly salted) block
+MINHASH_SEED = 42
+# one seed for every shard assignment: a bridge representative
+# (cross_shard_rep_pairs) is the min record_id of the shard apply_salt put
+# it in, so both shard record ids through _shard()
+SALT_SEED = 42
 
 
 def lsh_blocks(
-    records: DataFrame,
-    shingles_col: str = "shingles",
-    k: int = DEFAULT_K,
-    bands: int = DEFAULT_BANDS,
-    seed: int = 42,
+    records: DataFrame, shingles_col: str, k: int, bands: int
 ) -> DataFrame:
     """records(record_id, <shingles>) -> blocks(record_id, block_key).
 
@@ -52,7 +50,9 @@ def lsh_blocks(
     r = k // bands
     ex = records.select("record_id", F.explode(shingles_col).alias("_sh"))
     aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("_sh"), F.lit(seed))).alias(f"_h{i}")
+        F.min(F.xxhash64(F.lit(i), F.col("_sh"), F.lit(MINHASH_SEED))).alias(
+            f"_h{i}"
+        )
         for i in range(k)
     ]
     per = ex.groupBy("record_id").agg(*aggs)
@@ -69,7 +69,7 @@ def lsh_blocks(
     )
 
 
-def hot_keys(blocks: DataFrame, cap: int = DEFAULT_SALT_CAP) -> DataFrame:
+def hot_keys(blocks: DataFrame, cap: int) -> DataFrame:
     """(block_key, _shards) for keys with more than `cap` member records —
     the tiny broadcast side of every salting decision. Exposed separately
     so incremental/streaming callers can size shards from COMMITTED state
@@ -80,7 +80,12 @@ def hot_keys(blocks: DataFrame, cap: int = DEFAULT_SALT_CAP) -> DataFrame:
     )
 
 
-def apply_salt(blocks: DataFrame, hot: DataFrame, seed: int = 42) -> DataFrame:
+def _shard():
+    """Shard of a hot-key row: xxhash64(record_id, SALT_SEED) mod _shards."""
+    return F.pmod(F.xxhash64(F.col("record_id"), F.lit(SALT_SEED)), F.col("_shards"))
+
+
+def apply_salt(blocks: DataFrame, hot: DataFrame) -> DataFrame:
     """Shard every row whose key appears in `hot` into xxhash64(key, shard)
     by a deterministic hash of record_id; other rows map to xxhash64(key).
     Output keys are always 8-byte LONGS regardless of the input key type
@@ -96,17 +101,12 @@ def apply_salt(blocks: DataFrame, hot: DataFrame, seed: int = 42) -> DataFrame:
     out = blocks.join(F.broadcast(hot), "block_key", "left")
     salted = F.when(
         F.col("_shards").isNotNull(),
-        F.xxhash64(
-            F.col("block_key"),
-            F.pmod(F.xxhash64(F.col("record_id"), F.lit(seed)), F.col("_shards")),
-        ),
+        F.xxhash64(F.col("block_key"), _shard()),
     ).otherwise(F.xxhash64(F.col("block_key")))
     return out.select(F.col("record_id"), salted.alias("block_key"))
 
 
-def salt_blocks(
-    blocks: DataFrame, cap: int = DEFAULT_SALT_CAP, seed: int = 42
-) -> DataFrame:
+def salt_blocks(blocks: DataFrame, cap: int) -> DataFrame:
     """Explicit hot-key salting (SURVEY.md D4; north rule mandates it).
 
     Blocks larger than `cap` records are sharded into ceil(size/cap)
@@ -117,12 +117,10 @@ def salt_blocks(
 
     The hot-key table is tiny (keys with >cap records) and is broadcast.
     """
-    return apply_salt(blocks, hot_keys(blocks, cap), seed)
+    return apply_salt(blocks, hot_keys(blocks, cap))
 
 
-def cross_shard_rep_pairs(
-    blocks: DataFrame, hot: DataFrame, seed: int = 42
-) -> DataFrame:
+def cross_shard_rep_pairs(blocks: DataFrame, hot: DataFrame) -> DataFrame:
     """Bounded cross-shard recall recovery for salted hot keys.
 
     Salting deliberately drops pairs across shards of one hot key. For
@@ -143,9 +141,8 @@ def cross_shard_rep_pairs(
     match). Measured on a template-heavy fixture in test_blocking.
     """
     hot_rows = blocks.join(F.broadcast(hot), "block_key")
-    shard = F.pmod(F.xxhash64(F.col("record_id"), F.lit(seed)), F.col("_shards"))
     reps = (
-        hot_rows.select("block_key", shard.alias("_shard"), "record_id")
+        hot_rows.select("block_key", _shard().alias("_shard"), "record_id")
         .groupBy("block_key", "_shard")
         .agg(F.min("record_id").alias("_rep"))
     )
@@ -165,9 +162,18 @@ def cross_shard_rep_pairs(
     )
 
 
-def pairs_from_blocks(
-    blocks: DataFrame, min_block: int = 2, dedup: bool = True
-) -> DataFrame:
+def salted_pairs(blocks: DataFrame, hot: DataFrame) -> DataFrame:
+    """The hot-key expansion every salting blocker runs: within-shard pairs
+    of `blocks` salted against `hot`, plus the cross-shard representative
+    chain that lets connected components merge the shards again. Not
+    deduped (dedup=False): callers merge blockers and dedup once
+    (merge_pairs)."""
+    return pairs_from_blocks(apply_salt(blocks, hot), dedup=False).unionByName(
+        cross_shard_rep_pairs(blocks, hot)
+    )
+
+
+def pairs_from_blocks(blocks: DataFrame, dedup: bool = True) -> DataFrame:
     """Within-block self-join -> candidate pairs (id_a < id_b), one row per
     pair with the (deterministic min) shared block key.
 
@@ -194,10 +200,6 @@ def pairs_from_blocks(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "block_key")
     )
-    if min_block > 2:
-        sized = b.groupBy("block_key").agg(F.count("*").alias("_n"))
-        keep = sized.filter(F.col("_n") >= min_block).select("block_key")
-        pairs = pairs.join(keep, "block_key", "left_semi")
     if not dedup:
         return pairs
     return pairs.groupBy("id_a", "id_b").agg(F.min("block_key").alias("block_key"))

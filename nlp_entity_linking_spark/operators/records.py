@@ -57,11 +57,7 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
     )
 
 
-def extract_records(
-    pages: DataFrame,
-    langs: tuple[str, ...] | None = None,
-    shingle_n: int = 3,
-) -> DataFrame:
+def extract_records(pages: DataFrame, shingle_n: int = 3) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> records (RECORD_COLS).
 
     The title mention is the record surface (one record per page); html is
@@ -77,8 +73,6 @@ def extract_records(
     dominates the Arrow transfer, and Java's backtracking engine is slower
     than CPython's sre on the reluctant-dotall html patterns."""
     df = latest_per_url(pages)
-    if langs:
-        df = df.filter(F.col("lang").isin(*langs))
     # extract_page_nd: the non-deterministic-MARKED (but pure) Python UDF —
     # keeps the optimizer from duplicating the extraction under the surface
     # filters below (one ArrowEvalPython node, not two; guide §4.4)

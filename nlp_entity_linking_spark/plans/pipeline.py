@@ -44,23 +44,8 @@ class PipelineConfig:
     # phonetic-variant-heavy corpora at the cost of extra candidate pairs
     # (measured in test_pipeline.py::test_phonetic_blocker_recall).
     use_phonetic: bool = False
-    # chain one representative per (hot key, shard) across shards so
-    # transitive clustering can bridge salted hot blocks — bounds salting's
-    # documented cross-shard recall loss at S-1 extra scored pairs per hot
-    # key (B.cross_shard_rep_pairs).
-    link_shards: bool = True
     model: S.ScoreModel = field(default_factory=S.ScoreModel)
     max_cc_iter: int = 25
-    # when the full IRLS fit assigns Jaro-Winkler a NON-POSITIVE weight
-    # (measured at sf0.1: w = (-0.957, 3.566, 17.204) — jw is
-    # anti-predictive after tsl/cos on this corpus), refit on (tsl, cos)
-    # alone. The refit pins jw's weight to EXACTLY 0.0, which score_pairs
-    # recognizes and skips the Arrow/Python pass entirely — scoring goes
-    # full-JVM. A w1 <= 0 model buys nothing (the cheap-reject gate already
-    # ignores negative w1 via max(w1, 0)), so the only cost is refitting on
-    # the same driver-side sample; the F1 gate holds both ways
-    # (tests/test_pipeline.py::test_calibrate_drops_nonpositive_jw).
-    drop_nonpositive_jw: bool = True
 
 
 def build_records(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -81,13 +66,10 @@ def build_candidate_pairs(
     ).persist()
     if cache_registry is not None:
         cache_registry.append(blocks)
-    hot = B.hot_keys(blocks, cfg.salt_cap)
-    salted = B.apply_salt(blocks, hot)
-    # dedup once across all enabled blockers (merge_pairs) instead of
-    # per-blocker — one (id_a, id_b) exchange total
-    parts = [B.pairs_from_blocks(salted, dedup=False)]
-    if cfg.link_shards:
-        parts.append(B.cross_shard_rep_pairs(blocks, hot))
+    # hot keys are salted, and the salted shards bridged so connected
+    # components can merge them again (B.salted_pairs); dedup once across
+    # all enabled blockers (merge_pairs) — one (id_a, id_b) exchange total
+    parts = [B.salted_pairs(blocks, B.hot_keys(blocks, cfg.salt_cap))]
     if cfg.use_snb:
         parts.append(
             B.snb_pairs(
@@ -97,12 +79,7 @@ def build_candidate_pairs(
         )
     if cfg.use_phonetic:
         ph = B.phonetic_blocks(records)
-        hot_ph = B.hot_keys(ph, cfg.salt_cap)
-        parts.append(B.pairs_from_blocks(B.apply_salt(ph, hot_ph), dedup=False))
-        if cfg.link_shards:
-            parts.append(B.cross_shard_rep_pairs(ph, hot_ph))
-    if len(parts) == 1:
-        return B.pairs_from_blocks(salted)
+        parts.append(B.salted_pairs(ph, B.hot_keys(ph, cfg.salt_cap)))
     return B.merge_pairs(*parts)
 
 
@@ -249,31 +226,31 @@ def bounded_labeled_sample(labeled: DataFrame, cap: int) -> DataFrame:
 
 
 def calibrate(
-    features: DataFrame,
-    labeled_pairs: DataFrame,
-    cfg: PipelineConfig,
-    sample_cap: int = CALIBRATION_SAMPLE_CAP,
-    fit_features: tuple[str, ...] | None = None,
+    features: DataFrame, labeled_pairs: DataFrame, cfg: PipelineConfig
 ) -> "PipelineConfig":
     """Platt-style calibration (SURVEY.md I6): score a bounded labeled
     sample once with the default model to materialize jw, fit logistic
     coefficients + max-F1 threshold driver-side, return an updated config.
 
-    The toPandas() is bounded by `sample_cap` via a deterministic
+    The toPandas() is bounded by CALIBRATION_SAMPLE_CAP via a deterministic
     xxhash-residue filter — calibration quality saturates long before 10^6
     pairs, and an unbounded collect is a driver OOM at real labeled-set
     sizes.
 
-    fit_features: force a specific feature subset (ablation studies, or
-    pinning a jw-free model without relying on the drop_nonpositive_jw
-    auto-refit). None = fit all of S.FEATURES, then auto-refit per
-    cfg.drop_nonpositive_jw."""
+    When the full fit gives Jaro-Winkler a NON-POSITIVE weight (measured at
+    sf0.1: w = (-0.957, 3.566, 17.204) — jw is anti-predictive after
+    tsl/cos on this corpus), the model is refit on (tsl, cos) alone. The
+    refit pins jw's weight to EXACTLY 0.0, which score_pairs recognizes and
+    skips the Arrow/Python pass entirely — scoring goes full-JVM. A w1 <= 0
+    model buys nothing (the cheap-reject gate already ignores negative w1
+    via max(w1, 0)), so the only cost is one more driver-side solve on the
+    same sample (tests/test_pipeline.py::test_calibrate_drops_nonpositive_jw)."""
     import dataclasses
 
     lf = features.join(
         labeled_pairs.select("id_a", "id_b", "is_match"), ["id_a", "id_b"]
     )
-    lf = bounded_labeled_sample(lf, sample_cap)
+    lf = bounded_labeled_sample(lf, CALIBRATION_SAMPLE_CAP)
     # the scoring model here exists only to MATERIALIZE jw for the fit (the
     # score column is unused); a w1==0 incoming model would take the JVM
     # fast path and return jw=NULL, so substitute one that computes it —
@@ -282,17 +259,9 @@ def calibrate(
     mat_model = cfg.model if cfg.model.weights[0] != 0.0 else S.ScoreModel()
     scored = S.score_pairs(lf, mat_model)
     sample = scored.select("jw", "tsl", "cos", "is_match").toPandas()
-    if fit_features is not None:
-        model, threshold = S.fit_calibration(sample, features=fit_features)
-    else:
-        model, threshold = S.fit_calibration(sample)
-        if cfg.drop_nonpositive_jw and model.weights[0] <= 0.0:
-            # jw came out anti-predictive on this corpus: refit without it
-            # so scoring can stay JVM-side (score_pairs w1==0 fast path).
-            # Same sample, same IRLS — one extra driver-side solve.
-            model, threshold = S.fit_calibration(
-                sample, features=("tsl", "cos")
-            )
+    model, threshold = S.fit_calibration(sample)
+    if model.weights[0] <= 0.0:
+        model, threshold = S.fit_calibration(sample, features=("tsl", "cos"))
     return dataclasses.replace(cfg, model=model, score_threshold=threshold)
 
 
@@ -322,13 +291,10 @@ def score_edges(features: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ).filter(F.col("score") >= cfg.score_threshold)
 
 
-def cluster(
-    records: DataFrame, edges: DataFrame, cfg: PipelineConfig, on_iteration=None
-) -> DataFrame:
+def cluster(records: DataFrame, edges: DataFrame, cfg: PipelineConfig) -> DataFrame:
     labels = CC.connected_components(
         edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
         max_iter=cfg.max_cc_iter,
-        on_iteration=on_iteration,
     )
     return CC.attach_singletons(labels, records)
 
@@ -341,10 +307,9 @@ def select_threshold(
     records: DataFrame,
     labeled_pairs: DataFrame,
     cfg: PipelineConfig,
-    candidates: tuple[float, ...] = THRESHOLD_CANDIDATES,
 ) -> tuple[float, dict]:
-    """Pick the edge threshold that maximizes CLUSTER-level F1 on the
-    labeled pairs (not pair-level: connected components amplify recall
+    """Pick the edge threshold among THRESHOLD_CANDIDATES that maximizes
+    CLUSTER-level F1 on the labeled pairs (not pair-level: connected components amplify recall
     transitively, so the operating point should be precision-first — a
     pair-level sweep systematically under-thresholds).
 
@@ -367,10 +332,7 @@ def select_threshold(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    candidates = tuple(candidates)  # accept generators; len() below
-    if not candidates:
-        return (0.5, {"f1": -1.0})
-
+    candidates = THRESHOLD_CANDIDATES
     swept = scored.filter(F.col("score") >= min(candidates)).select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v"), "score"
     )
@@ -388,9 +350,7 @@ def select_threshold(
             clusters = CC.attach_singletons(labels, records)
             return E.f1_metrics(labeled_pairs, clusters)
 
-        # cap concurrent sweeps: each holds a full CC loop's jobs in flight,
-        # and a caller passing a dense grid must not swamp the scheduler
-        with ThreadPoolExecutor(max_workers=min(len(candidates), 8)) as pool:
+        with ThreadPoolExecutor(max_workers=len(candidates)) as pool:
             metrics = list(pool.map(evaluate, candidates))
     best = (0.5, {"f1": -1.0})
     for t, m in zip(candidates, metrics):

@@ -223,10 +223,7 @@ def _read_state(
 
 
 def incremental_candidate_pairs(
-    new_blocks: DataFrame,
-    old_blocks: DataFrame | None,
-    salt_cap: int,
-    link_shards: bool = True,
+    new_blocks: DataFrame, old_blocks: DataFrame | None, salt_cap: int
 ) -> DataFrame:
     """Candidate pairs touching a new record: new x new within the batch
     (salted by batch-local sizes, like the batch pipeline) plus new x old
@@ -241,22 +238,19 @@ def incremental_candidate_pairs(
     sizes, not the merged corpus — a bounded approximation of batch salting
     that refreshes at compaction.
 
-    link_shards mirrors the batch pipeline's cross-shard recall bridge
-    (B.cross_shard_rep_pairs): rep-chain pairs are added for batch-local
-    hot keys AND for committed hot keys TOUCHED by this batch (a key
-    present in new_blocks). Untouched committed hot keys need no re-chain:
+    The batch pipeline's cross-shard recall bridge runs here too: rep-chain
+    pairs are added for batch-local hot keys (B.salted_pairs) AND for
+    committed hot keys TOUCHED by this batch (a key present in
+    new_blocks). Untouched committed hot keys need no re-chain:
     their shard composition only changes when new rows arrive (which makes
     them touched) or at compaction (after which the next touch re-chains
     against the refreshed shard counts), so per-batch bridge work stays
     O(shards of touched hot keys), not O(corpus/cap)."""
     from ..operators import blocking as B
 
-    hot_nn = B.hot_keys(new_blocks, salt_cap)
-    nn = B.pairs_from_blocks(B.apply_salt(new_blocks, hot_nn), dedup=False)
-    if link_shards:
-        nn = nn.unionByName(B.cross_shard_rep_pairs(new_blocks, hot_nn))
+    nn = B.salted_pairs(new_blocks, B.hot_keys(new_blocks, salt_cap))
     if old_blocks is None:
-        return nn.groupBy("id_a", "id_b").agg(F.min("block_key").alias("block_key"))
+        return B.merge_pairs(nn)
     hot = B.hot_keys(old_blocks, salt_cap)
     no = (
         B.apply_salt(new_blocks, hot)
@@ -268,12 +262,11 @@ def incremental_candidate_pairs(
             "block_key",
         )
     )
-    if link_shards:
-        hot_touched = hot.join(
-            new_blocks.select("block_key").distinct(), "block_key", "left_semi"
-        )
-        merged = new_blocks.unionByName(old_blocks)
-        no = no.unionByName(B.cross_shard_rep_pairs(merged, hot_touched))
+    hot_touched = hot.join(
+        new_blocks.select("block_key").distinct(), "block_key", "left_semi"
+    )
+    merged = new_blocks.unionByName(old_blocks)
+    no = no.unionByName(B.cross_shard_rep_pairs(merged, hot_touched))
     return B.merge_pairs(nn, no)
 
 
@@ -357,8 +350,8 @@ def incremental_er(
     tables and incrementally maintained stats in a production deployment.
     Hot committed keys (> salt_cap members) are salted into within-shard
     new x old joins (incremental_candidate_pairs) — the same bounded-recall
-    semantics as batch salting, not a drop — and cfg.link_shards adds the
-    same cross-shard rep-chain bridge the batch pipeline runs, over
+    semantics as batch salting, not a drop — plus the same cross-shard
+    rep-chain bridge the batch pipeline runs, over
     batch-local hot keys and committed hot keys touched by the batch
     (shard counts come from committed/batch-local sizes where batch uses
     global sizes — the one remaining hot-key approximation). Sorted-
@@ -472,8 +465,7 @@ def incremental_er(
             cached.append(new_blocks)
             old_blocks = _read_state(spark, cat, "blocks", epochs, state_cache)
             pairs = incremental_candidate_pairs(
-                new_blocks, old_blocks, cfg.salt_cap,
-                link_shards=cfg.link_shards,
+                new_blocks, old_blocks, cfg.salt_cap
             ).persist()
             cached.append(pairs)
             merged_records = (
@@ -631,10 +623,7 @@ def _converge_hot_key_edges(
             return None  # no hot keys -> streamed edges already batch-equal
         hot_members = blocks.join(F.broadcast(hot), "block_key", "left_semi")
         h_ids = hot_members.select("record_id").distinct().persist()
-        parts = [B.pairs_from_blocks(B.apply_salt(hot_members, hot), dedup=False)]
-        if cfg.link_shards:
-            parts.append(B.cross_shard_rep_pairs(hot_members, hot))
-        hot_pairs = B.merge_pairs(*parts)
+        hot_pairs = B.merge_pairs(B.salted_pairs(hot_members, hot))
 
         flagged = edges.join(
             h_ids.select(F.col("record_id").alias("id_a"), F.lit(True).alias("_ha")),

@@ -25,7 +25,7 @@ def test_minhash_deterministic_and_similarity_monotone(spark):
     keys with the original than an unrelated string does."""
     r = _records(spark, ["acme corporation", "acme corporation", "acme corp", "zzz totally other"])
     keys = {}
-    for row in B.lsh_blocks(r, k=64, bands=32).collect():
+    for row in B.lsh_blocks(r, "shingles", k=64, bands=32).collect():
         keys.setdefault(row.record_id, set()).add(row.block_key)
     assert keys[0] == keys[1] and len(keys[0]) == 32
     shared_close = len(keys[0] & keys[2])
@@ -37,7 +37,7 @@ def test_lsh_blocks_recall_on_duplicates(spark):
     r = _records(spark, ["jane doe consulting", "jane doe consulting!", "jane d0e consulting", "completely different org"])
     # permissive banding (16x4, s-curve ~0.55) so the 1-char-typo pair is
     # caught deterministically in this 4-row unit fixture
-    blocks = B.lsh_blocks(r, bands=16)
+    blocks = B.lsh_blocks(r, "shingles", k=64, bands=16)
     pairs = B.pairs_from_blocks(blocks)
     got = {(p.id_a, p.id_b) for p in pairs.collect()}
     assert (0, 1) in got and (0, 2) in got
@@ -155,16 +155,31 @@ def test_phonetic_blocks_pair_spelling_variants(spark):
 
 def test_cross_shard_rep_pairs_bounded_and_connecting(spark):
     """Hot key of 200 records, cap 50 -> 4 shards: exactly S-1 = 3 chained
-    representative pairs, and (within-shard pairs + rep pairs) connect all
-    200 records into ONE component — salting's cross-shard recall loss is
-    bridged for transitive clustering at bounded cost."""
+    representative pairs, each endpoint the min record_id of the shard
+    apply_salt put it in, and salted_pairs (within-shard pairs + rep pairs)
+    connects all 200 records into ONE component — salting's cross-shard
+    recall loss is bridged for transitive clustering at bounded cost."""
     rows = [(i, "hot") for i in range(200)] + [(i + 500, f"cold{i}") for i in range(4)]
     blocks = spark.createDataFrame(rows, "record_id long, block_key string")
     hot = B.hot_keys(blocks, cap=50)
     reps = B.cross_shard_rep_pairs(blocks, hot).collect()
     assert len(reps) == 3  # chain, not C(4,2)=6 and not C(200,2)
-    within = B.pairs_from_blocks(B.apply_salt(blocks, hot)).collect()
-    # union-find over both pair sets
+    # apply_salt and the bridge shard through the same seed: every chain
+    # endpoint is the smallest member of its apply_salt shard
+    shard_of = {
+        r.record_id: r.block_key
+        for r in B.apply_salt(blocks, hot).collect()
+        if r.record_id < 200
+    }
+    assert len(set(shard_of.values())) == 4
+    shard_min: dict = {}
+    for rid, key in shard_of.items():
+        shard_min[key] = min(rid, shard_min.get(key, rid))
+    ends = {i for p in reps for i in (p.id_a, p.id_b)}
+    assert len(ends) == 4
+    assert {shard_min[shard_of[i]] for i in ends} == ends
+    pairs = B.salted_pairs(blocks, hot).collect()
+    # union-find over within-shard and rep pairs
     parent = {i: i for i in range(200)}
 
     def find(x):
@@ -173,7 +188,7 @@ def test_cross_shard_rep_pairs_bounded_and_connecting(spark):
             x = parent[x]
         return x
 
-    for p in list(within) + list(reps):
+    for p in pairs:
         if p.id_a < 500 and p.id_b < 500:
             parent[find(p.id_a)] = find(p.id_b)
     assert len({find(i) for i in range(200)}) == 1
@@ -181,22 +196,26 @@ def test_cross_shard_rep_pairs_bounded_and_connecting(spark):
 
 def test_link_shards_restores_template_cluster(spark):
     """Template-heavy corpus: 150 records with IDENTICAL surface (one hot
-    LSH block, cap 64 -> 3 shards). Without shard linking the candidate
-    graph splits the entity into 3 clusters; with it (default) the full
-    pipeline graph is one component. Measured completeness delta of the
-    verdict item."""
+    LSH block, cap 64 -> 3 shards). Salting alone (salt_blocks, no bridge)
+    splits the entity into 3 clusters; the pipeline's candidate graph,
+    which bridges the shards, is one component."""
     from nlp_entity_linking_spark.operators import cc as CC
     from nlp_entity_linking_spark.plans import pipeline as P
 
     recs = _records(spark, ["acme templated page"] * 150)
 
-    def n_components(link):
-        cfg = P.PipelineConfig(use_snb=False, link_shards=link)
-        pairs = P.build_candidate_pairs(recs, cfg)
+    def n_components(pairs):
         labels = CC.connected_components(
             pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         )
         return labels.select("cluster_id").distinct().count()
 
-    assert n_components(False) == 3
-    assert n_components(True) == 1
+    cfg = P.PipelineConfig(use_snb=False)
+    unbridged = B.pairs_from_blocks(
+        B.salt_blocks(
+            B.lsh_blocks(recs, "shingles", k=cfg.minhash_k, bands=cfg.bands),
+            cfg.salt_cap,
+        )
+    )
+    assert n_components(unbridged) == 3
+    assert n_components(P.build_candidate_pairs(recs, cfg)) == 1

@@ -46,7 +46,7 @@ def _our_pairs(spark):
     df = df.withColumn("norm", normalize("surface")).withColumn(
         "shingles", char_shingles("norm")
     )
-    blocks = B.lsh_blocks(df, bands=16)
+    blocks = B.lsh_blocks(df, "shingles", k=64, bands=16)
     return {(r.id_a, r.id_b) for r in B.pairs_from_blocks(blocks).collect()}
 
 

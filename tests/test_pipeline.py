@@ -36,7 +36,15 @@ def test_end_to_end_f1(spark):
     rg = records.join(gold, "url").select("record_id", "entity_id")
     labeled = gen_labeled_pairs(pairs, rg).persist()
     cfg = P.calibrate(features, labeled, cfg)
+    # jw-ablation operating point: on this corpus the full fit gives jw a
+    # non-positive weight, so calibrate refits on tsl+cos alone and scoring
+    # stays fully JVM-side (the sf0.1 fit measured w1 < 0 too, making this
+    # the production-relevant path)
+    assert cfg.model.weights[0] == 0.0, cfg.model
     scored = S.score_pairs(features, cfg.model).persist()
+    assert "MapIn" not in (  # neither Pandas nor Arrow
+        scored._jdf.queryExecution().executedPlan().toString()
+    )
     scored.count()
     thr, metrics = P.select_threshold(scored, records, labeled, cfg)
     # binding target (BASELINE.json): pairwise F1 >= 0.99 at the shared
@@ -47,20 +55,8 @@ def test_end_to_end_f1(spark):
     clusters = P.cluster(records, edges, cfg).persist()
     assert clusters.count() == records.count()
     assert clusters.groupBy("record_id").count().filter("count > 1").count() == 0
-    # jw-ablation operating point: a tsl+cos-only calibration must hold the
-    # F1 gate too, while scoring stays fully JVM-side (the sf0.1 fit
-    # measured w1 < 0, making this the production-relevant path).
-    cfg2 = P.calibrate(
-        features, labeled, P.PipelineConfig(), fit_features=("tsl", "cos")
-    )
-    assert cfg2.model.weights[0] == 0.0
-    scored2 = S.score_pairs(features, cfg2.model).persist()
-    assert "MapIn" not in (  # neither Pandas nor Arrow
-        scored2._jdf.queryExecution().executedPlan().toString()
-    )
-    scored2.count()
-    _, m2 = P.select_threshold(scored2, records, labeled, cfg2)
-    assert m2["f1"] >= 0.99, m2
+    for df in (clusters, scored, labeled, features, pairs, records):
+        df.unpersist()
 
 
 def test_phonetic_blocker_recall(spark):
@@ -237,9 +233,9 @@ def test_calibration_sample_is_bounded(spark):
 def test_calibrate_drops_nonpositive_jw(spark):
     """On a corpus where jw is ANTI-predictive (matches have dissimilar
     surfaces, non-matches near-identical ones), the full fit must measure
-    w1 < 0, and the default drop_nonpositive_jw knob must refit without jw
-    — pinning w1 to exactly 0.0 so scoring takes the JVM fast path — while
-    still classifying the sample correctly."""
+    w1 < 0, and calibrate must refit without jw — pinning w1 to exactly 0.0
+    so scoring takes the JVM fast path — while still classifying the sample
+    correctly."""
     import random
 
     rng = random.Random(3)
@@ -265,10 +261,14 @@ def test_calibrate_drops_nonpositive_jw(spark):
         [(a, b, m) for a, b, _, _, _, _, m in rows],
         "id_a long, id_b long, is_match boolean",
     )
-    keep = P.calibrate(
-        feats, labeled, P.PipelineConfig(drop_nonpositive_jw=False)
+    # the full fit, on the same jw-materialized sample calibrate fits
+    sample = (
+        S.score_pairs(feats.join(labeled, ["id_a", "id_b"]), S.ScoreModel())
+        .select("jw", "tsl", "cos", "is_match")
+        .toPandas()
     )
-    assert keep.model.weights[0] < 0.0, keep.model  # jw measured harmful
+    full, _ = S.fit_calibration(sample)
+    assert full.weights[0] < 0.0, full  # jw measured harmful
     dropped = P.calibrate(feats, labeled, P.PipelineConfig())
     assert dropped.model.weights[0] == 0.0
     assert dropped.model.version == "fitted-tsl+cos-v1"

@@ -271,10 +271,10 @@ def test_read_state_rejects_old_string_block_keys(spark, tmp_path):
 
 
 def test_incremental_link_shards_bridge(spark):
-    """link_shards on the INCREMENTAL path mirrors the batch bridge:
-    committed hot keys touched by the batch gain rep-chain pairs across
-    their shards (bounded at shards-1 per hot key), so a template entity
-    salted into S shards can still merge transitively cross-wave."""
+    """The INCREMENTAL path runs the batch bridge too: committed hot keys
+    touched by the batch gain rep-chain pairs across their shards (bounded
+    at shards-1 per hot key), so a template entity salted into S shards
+    can still merge transitively cross-wave."""
     cap = 16
     old = spark.createDataFrame(
         [(i, "hot") for i in range(100)],
@@ -284,19 +284,18 @@ def test_incremental_link_shards_bridge(spark):
         [(i, "hot") for i in range(1000, 1005)],
         "record_id long, block_key string",
     )
-    off = {
-        (p.id_a, p.id_b)
-        for p in ST.incremental_candidate_pairs(
-            new, old, cap, link_shards=False
-        ).collect()
-    }
-    on = {
-        (p.id_a, p.id_b)
-        for p in ST.incremental_candidate_pairs(
-            new, old, cap, link_shards=True
-        ).collect()
-    }
-    extra = on - off
+
+    def old_x_old(new_blocks):
+        # every other pair touches a new record; new ids exceed every old
+        # id, so each shard's min-id rep is old and the old x old pairs are
+        # exactly the bridge's pairs
+        return {
+            (p.id_a, p.id_b)
+            for p in ST.incremental_candidate_pairs(new_blocks, old, cap).collect()
+            if p.id_b < 1000
+        }
+
+    extra = old_x_old(new)
     n_shards = -(-100 // cap)  # committed sizing: ceil(100/16) = 7
     assert 1 <= len(extra) <= n_shards - 1
     # bridge endpoints are per-shard min-record reps of the merged rows,
@@ -314,23 +313,11 @@ def test_incremental_link_shards_bridge(spark):
     for a, b in extra:
         assert sh[a] != sh[b], (a, b)
     # an untouched committed hot key gets NO bridge work: a batch touching
-    # only a cold key adds zero extra pairs
+    # only a cold key yields no old x old pair
     new_cold = spark.createDataFrame(
         [(2000, "cold"), (2001, "cold")], "record_id long, block_key string"
     )
-    off_c = {
-        (p.id_a, p.id_b)
-        for p in ST.incremental_candidate_pairs(
-            new_cold, old, cap, link_shards=False
-        ).collect()
-    }
-    on_c = {
-        (p.id_a, p.id_b)
-        for p in ST.incremental_candidate_pairs(
-            new_cold, old, cap, link_shards=True
-        ).collect()
-    }
-    assert on_c == off_c
+    assert old_x_old(new_cold) == set()
 
 
 def test_incremental_er_compaction(spark, tmp_path):
@@ -547,9 +534,7 @@ def test_incremental_vs_batch_divergence_fence(spark, tmp_path):
     old = None
     for e in epochs:
         nb = cat.read(spark, f"blocks_epoch_{e}")
-        pe = ST.incremental_candidate_pairs(
-            nb, old, cfg.salt_cap, link_shards=cfg.link_shards
-        )
+        pe = ST.incremental_candidate_pairs(nb, old, cfg.salt_cap)
         spairs |= {(r.id_a, r.id_b) for r in pe.select("id_a", "id_b").collect()}
         old = nb if old is None else old.unionByName(nb)
 

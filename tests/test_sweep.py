@@ -21,27 +21,40 @@ from nlp_entity_linking_spark.sources.synthetic import gen_pages
 
 
 @pytest.fixture(scope="module")
-def corpus(spark):
-    """The 700-page fixture up to calibration: records, labeled pairs, and
-    the features scored under the default and the calibrated model."""
+def corpus(spark, tmp_path_factory):
+    """The 700-page fixture up to calibration — records, labeled pairs, and
+    the features scored under the default and the calibrated model —
+    committed to parquet and read back, as run_with_catalog commits them.
+
+    Not persisted frames: a persisted frame keeps the partitioning of the
+    plan AQE finalized while materializing it, and gen_labeled_pairs' two
+    joins finalize in one of two shapes depending on which of their shuffle
+    stages finishes first. One leaves the labeled pairs hash-partitioned on
+    id_a, the other on id_b, and then pairwise_confusion's id_a join needs
+    one more exchange, hence one more job (test_sweep_job_audit counted 11
+    in full-suite runs). A parquet scan has no partitioning to inherit."""
+    base = tmp_path_factory.mktemp("sweep")
     pages, gold = gen_pages(spark, 700)
     cfg = P.PipelineConfig()
     records = P.build_records(pages, cfg).persist()
     pairs = P.build_candidate_pairs(records, cfg).persist()
     features = P.build_features(records, pairs, cfg).persist()
     rg = records.join(gold, "url").select("record_id", "entity_id")
-    labeled = gen_labeled_pairs(pairs, rg).persist()
-    labeled.count()
+    labeled = gen_labeled_pairs(pairs, rg)
     calibrated = P.calibrate(features, labeled, cfg)
-    scored = {}
-    for name, c in (("default", cfg), ("calibrated", calibrated)):
-        scored[name] = (S.score_pairs(features, c.model).persist(), c)
-        scored[name][0].count()
-    yield records, labeled, scored
-    for df, _ in scored.values():
+
+    def commit(name, df):
+        df.write.parquet(str(base / name))
+        return spark.read.parquet(str(base / name))
+
+    scored = {
+        name: (commit(name, S.score_pairs(features, c.model)), c)
+        for name, c in (("default", cfg), ("calibrated", calibrated))
+    }
+    committed = commit("records", records), commit("labeled", labeled)
+    for df in (features, pairs, records):
         df.unpersist()
-    for df in (labeled, features, pairs, records):
-        df.unpersist()
+    return (*committed, scored)
 
 
 def _per_candidate(monkeypatch, *args):

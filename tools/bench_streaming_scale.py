@@ -8,11 +8,10 @@ verifies the final streamed clusters are IDENTICAL to the batch pipeline
 over the union of all pages.
 
 cfg uses use_snb=False (sorted-neighborhood is global-order by
-construction and is not run incrementally); link_shards stays at its
-default True on BOTH paths — the streaming blocker now runs the same
-cross-shard rep-chain bridge as batch (over batch-local hot keys plus
-committed hot keys the batch touches), so the comparison exercises the
-production configuration. Residual divergence on hot keys comes from
+construction and is not run incrementally). Both paths bridge salted hot
+keys: the streaming blocker runs the same cross-shard rep-chain bridge as
+batch (over batch-local hot keys plus committed hot keys the batch
+touches), so the comparison exercises the production configuration. Residual divergence on hot keys comes from
 shard counts (committed/batch-local sizes vs batch's global sizes) and
 is quantified, not hidden, by the diff_fraction output.
 
